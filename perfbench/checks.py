@@ -1,9 +1,9 @@
 """Ground truth for the four tables, the table_sql query mix with its
 expected results, and the comparisons that decide ``failed``.
 
-The expected rows come from ``traffic.Model.tables``; the engine's tables
-are read back and summarised by the same code, so the comparison is exact
-and costs no Spark job.
+The expected rows come from ``traffic.Model.tables``. The tables an engine
+run wrote are read back with pyarrow and compared with them row for row,
+every column, so the comparison is exact and costs no Spark job.
 """
 
 from __future__ import annotations
@@ -11,9 +11,15 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
+from hbase_packet_inspector_spark.schema import (
+    ACTION_COLUMNS, REQUEST_COLUMNS, RESPONSE_COLUMNS, RESULT_COLUMNS)
+
 TABLES = ("requests", "responses", "actions", "results")
+COLUMNS = dict(zip(TABLES, (REQUEST_COLUMNS, RESPONSE_COLUMNS,
+                            ACTION_COLUMNS, RESULT_COLUMNS)))
 
 
 def _nz(v) -> int:
@@ -51,8 +57,70 @@ def summary(tables: dict[str, list[dict]]) -> dict:
 
 
 def read_tables(out_dir: str) -> dict[str, list[dict]]:
-    """The four tables an engine run wrote under ``out_dir``, as rows."""
-    return {t: pq.read_table(f"{out_dir}/{t}").to_pylist() for t in TABLES}
+    """The four tables an engine run wrote under ``out_dir``, as rows with
+    ``ts`` in epoch microseconds; a streaming sink's ``batch_id``
+    partition column is dropped."""
+    out = {}
+    for t in TABLES:
+        tbl = pq.read_table(f"{out_dir}/{t}")
+        if "batch_id" in tbl.column_names:
+            tbl = tbl.drop_columns(["batch_id"])
+        if "ts" in tbl.column_names:
+            i = tbl.column_names.index("ts")
+            us = pa.timestamp("us", tz=tbl["ts"].type.tz)
+            tbl = tbl.set_column(i, "ts", tbl["ts"].cast(us).cast(pa.int64()))
+        out[t] = tbl.to_pylist()
+    return out
+
+
+def _sorted_rows(rows: list[dict], cols: list[str]) -> list[tuple]:
+    return sorted((tuple(r.get(c) for c in cols) for r in rows),
+                  key=lambda row: [(v is None, v) for v in row])
+
+
+def _key(row: dict) -> tuple:
+    return row["client"], row["port"], row["call_id"]
+
+
+def snap_truncated_ts(got: dict[str, list[dict]], want: dict[str, list[dict]]
+                      ) -> tuple[dict[str, list[dict]], int]:
+    """The engine's pcap reader turns some microsecond timestamps into
+    floats and truncates them 1 µs low (``int(frac / 1e6 * 1e6)`` in
+    ``sources/pcap.py``), which can also move ``elapsed`` by 1 ms. Returns
+    ``got`` with exactly those differences replaced by the expected values,
+    and how many requests and responses had a truncated ``ts``."""
+    fixed = dict(got)
+    cut = set()
+    for t in ("requests", "responses"):
+        exp = {_key(r): r for r in want[t]}
+        fixed[t] = []
+        for r in got[t]:
+            e = exp.get(_key(r))
+            if e is not None and r["ts"] + 1 == e["ts"]:
+                r = {**r, "ts": e["ts"]}
+                cut.add((t, _key(r)))
+            fixed[t].append(r)
+    exp = {_key(r): r for r in want["responses"]}
+    for i, r in enumerate(fixed["responses"]):
+        e = exp.get(_key(r))
+        touched = {("requests", _key(r)), ("responses", _key(r))} & cut
+        if touched and e and None not in (r["elapsed"], e["elapsed"]) \
+                and abs(r["elapsed"] - e["elapsed"]) == 1:
+            fixed["responses"][i] = {**r, "elapsed": e["elapsed"]}
+    return fixed, len(cut)
+
+
+def diff_tables(got: dict[str, list[dict]], want: dict[str, list[dict]]
+                ) -> list[str]:
+    """Names of the tables whose rows differ from the expected ones: each
+    table's column set and the multiset of its rows, every column."""
+    bad = []
+    for t in TABLES:
+        cols = COLUMNS[t]
+        if any(set(r) != set(cols) for r in got[t][:1] + want[t][:1]) \
+                or _sorted_rows(got[t], cols) != _sorted_rows(want[t], cols):
+            bad.append(t)
+    return bad
 
 
 def outcome(summary: dict) -> dict[str, float]:

@@ -13,7 +13,7 @@ import os
 import pytest
 
 from hbase_packet_inspector_spark.sources import hbase_wire as W
-from perfbench import checks, traffic, workloads
+from perfbench import checks, probes, traffic, workloads
 
 
 def _write_all(model: traffic.Model, root: str) -> list[str]:
@@ -50,7 +50,7 @@ def _decoded(parsed: dict) -> dict:
 
 
 def test_frames_round_trip():
-    model = traffic.build(5, 600)
+    model = traffic.build(5, 1500)
     pending: dict = {}
     kinds = set()
     for conn in model.conns:
@@ -86,10 +86,43 @@ def test_capture_shape():
 @pytest.mark.parametrize("name", sorted(workloads.WORKLOADS))
 def test_tiny_seed_end_to_end(name, tmp_path):
     w = workloads.WORKLOADS[name](21, str(tmp_path), rpcs=150, cpus=2)
-    if name == "stream_replay":
-        w.files = 3
     w.prepare()
-    w.start(first=False)
+    w.start()
     p = w.run_pass(traced=False)
     assert p.failed == 0, p.info["bad"]
     assert len(p.ops_ms) == w.ops_per_pass
+
+
+def test_stream_probe_matches_its_model(tmp_path):
+    w = workloads.TableSql(22, str(tmp_path), rpcs=150, cpus=2)
+    w.stream_rpcs = 120
+    w.prepare()
+    w.start()
+    with probes.ProcTree() as tree:
+        w.tree = tree
+        met = w.stream_probe()
+    assert w.probe_checks["streaming"] == []
+    assert met["streaming.batches"] == w.stream_files
+    assert met["streaming.input_rows"] == len(w.stream_model.events)
+
+
+def test_exact_check_catches_one_wrong_cell():
+    model = traffic.build(7, 200)
+    want = model.tables
+    got = {t: [dict(r) for r in rows] for t, rows in want.items()}
+    assert checks.diff_tables(got, want) == []
+    got["requests"][5]["row"] = "row-x"
+    got["results"][0]["error"] = "boom"
+    assert checks.diff_tables(got, want) == ["requests", "results"]
+
+
+def test_truncated_ts_is_tolerated_only_at_one_microsecond():
+    model = traffic.build(8, 200)
+    want = model.tables
+    got = {t: [dict(r) for r in rows] for t, rows in want.items()}
+    got["requests"][3]["ts"] -= 1
+    fixed, cut = checks.snap_truncated_ts(got, want)
+    assert cut == 1 and checks.diff_tables(fixed, want) == []
+    got["requests"][3]["ts"] -= 1
+    fixed, cut = checks.snap_truncated_ts(got, want)
+    assert cut == 0 and checks.diff_tables(fixed, want) == ["requests"]

@@ -15,6 +15,17 @@ responses are exceptions, some multi results carry one. The capture also
 holds one response with no request and one Get answered after the
 correlation TTL. Payloads are cut into segments of at most 1448 bytes.
 
+The method mix, scan-session shape, caching, rows per scan response,
+multi put share and response latency follow the reference's real capture
+(see ``OP_WEIGHTS`` and the constants beside it). These are assumptions,
+not measured anywhere: the share of pipelined Get bursts (the reference's
+deferredFlush fixture has many messages per packet, but no rate), the
+exception rates (2% of Get/put, 3% of multi results), multi sizes of 2-50
+actions (the fixture has 20 and 100), 1-5 qualifiers per Get and 0-12
+cells per Get response, 1-4 values of 8-96 bytes per put (the fixture
+writes one 1000-byte cell, which would make capture bytes rather than
+decode the bulk of the work), and the think time between calls.
+
 The decoded view of every message (what the engine's decoder must
 extract) is built here from the model, not by calling the engine.
 """
@@ -39,6 +50,23 @@ TABLES = ("usertable", "orders", "events", "profile")
 GET_ERROR = "org.apache.hadoop.hbase.NotServingRegionException"
 RESULT_ERROR = "org.apache.hadoop.hbase.RegionTooBusyException"
 ORPHAN_CALL_ID = 999_999
+
+# Derived from the reference's real HBase 1.2.6 capture of its `hbase pe`
+# fixtures (tests/fixtures/hbase_capture; scale in BASELINE.md): its 67
+# requests make up 14 scan sessions, 6 multi, 4 get and 4 put calls (its 4
+# small-scan and 3 open-region calls have no encoder here); 18 next-rows
+# over 14 sessions; scanner caching 20; the cells of its next-rows
+# responses; the elapsed ms of its 67 responses; its multi actions are half
+# puts (one 100-put batch, five 20-get batches).
+OP_WEIGHTS = (("scan", 14), ("multi", 6), ("get", 4), ("put", 4),
+              ("burst", 2))  # the burst weight is assumed; see the docstring
+NEXT_ROWS_PER_SESSION = (0, 1, 1, 1, 2, 2, 2)  # mean 9/7 = 18/14
+CACHING = 20
+FIXTURE_NEXT_ROWS_CELLS = (0,) * 6 + (8,) * 5 + (20,) * 5 + (2, 4)
+FIXTURE_ELAPSED_MS = ((0,) * 2 + (1,) * 24 + (2,) * 15 + (3,) * 10
+                      + (4, 4, 5, 7, 7, 8, 10, 11, 11, 12, 17, 18, 28, 59,
+                         67, 98))
+MULTI_PUT_SHARE = 0.5
 _DURABILITY = {0: "use_default", 1: "skip_wal", 2: "async_wal",
                3: "sync_wal", 4: "fsync_wal"}
 
@@ -63,6 +91,8 @@ EVENT_SCHEMA = pa.schema([
     ("actions", pa.list_(_ACTION)), ("results", pa.list_(_RESULT)),
 ])
 _DECODED = [f.name for f in EVENT_SCHEMA][7:]
+# request fields a matched response inherits and no response carries itself
+_REQ_ONLY = ("row", "stoprow", "durability")
 
 
 @dataclass
@@ -126,10 +156,8 @@ class _Builder:
                 for _ in range(self.rng.randint(1, 4))]
 
     def _latency_us(self) -> int:
-        r = self.rng.random()
-        if r < 0.9:
-            return self.rng.randint(300, 8_000)
-        return self.rng.randint(8_000, 120_000)
+        return (self.rng.choice(FIXTURE_ELAPSED_MS) * 1000
+                + self.rng.randrange(1, 1000))
 
     def _rpc(self, conn: Conn, t: int, call_id: int, method: str, param: bytes,
              req_view: dict, body: bytes | None, resp_view: dict,
@@ -156,18 +184,20 @@ class _Builder:
                    and resp.ts // 1000 - req.ts // 1000 <= TTL_MS)
         if req is not None:
             self.requests.append({
-                **key, "method": row["method"], "table": row["table"],
-                "region": row["region"], "cells": row["req_cells"],
-                "batch": len(row.get("actions", ())),
+                **key, "server": conn.server, "method": row["method"],
+                "table": row["table"], "region": row["region"],
+                **{c: row.get(c) for c in _REQ_ONLY},
+                "cells": row["req_cells"], "batch": len(row.get("actions", ())),
                 "size": len(req.frame) - 4, "ts": req.ts})
             for a in row.get("actions", ()):
                 self.actions.append({**key, **a})
         if resp is not None:
             if matched:
                 self.responses.append({
-                    **key, "method": row["method"],
+                    **key, "server": conn.server, "method": row["method"],
                     "table": row.get("resp_table", row["table"]),
                     "region": row.get("resp_region", row["region"]),
+                    **{c: row.get(c) for c in _REQ_ONLY},
                     "cells": row["resp_cells"], "batch": len(row.get("actions", ())),
                     "size": len(resp.frame) - 4, "ts": resp.ts,
                     "elapsed": resp.ts // 1000 - req.ts // 1000,
@@ -177,7 +207,9 @@ class _Builder:
                     self.results.append({**key, **a, "cells": cells, "error": err})
             else:
                 self.responses.append({
-                    **key, "method": "unknown", "table": None, "region": None,
+                    **key, "server": conn.server, "method": "unknown",
+                    "table": None, "region": None,
+                    **{c: None for c in _REQ_ONLY},
                     "cells": resp.decoded.get("cells") or 0, "batch": 0,
                     "size": len(resp.frame) - 4, "ts": resp.ts,
                     "elapsed": None, "error": resp.decoded.get("error")})
@@ -197,8 +229,8 @@ class _Builder:
              "row": row.decode(), "cells": q},
             None if err else wire.get_response(k),
             {"method": "get", **({} if err else {"cells": k})},
-            {"method": "get", "table": table, "region": region, "req_cells": q,
-             "resp_cells": q if err else k},
+            {"method": "get", "table": table, "region": region,
+             "row": row.decode(), "req_cells": q, "resp_cells": q if err else k},
             error=err,
             resp_delay_us=(TTL_MS + 1_000) * 1000 if late else None)
 
@@ -215,6 +247,7 @@ class _Builder:
              "durability": _DURABILITY[dur]},
             None if err else wire.mutate_response(), {"method": "put"},
             {"method": "put", "table": table, "region": region,
+             "row": row.decode(), "durability": _DURABILITY[dur],
              "req_cells": len(values), "resp_cells": len(values)},
             error=err)
 
@@ -231,7 +264,7 @@ class _Builder:
             enc, res = [], []
             for _ in slots:
                 row = self._row()
-                if self.rng.random() < 0.7:
+                if self.rng.random() < MULTI_PUT_SHARE:
                     values = self._values()
                     dur = self.rng.choice((0, 0, 1))
                     enc.append(wire.action_put(row, values, dur))
@@ -269,13 +302,14 @@ class _Builder:
         while sid in self.scanner_ids:
             sid = self.rng.getrandbits(62)
         self.scanner_ids.add(sid)
-        caching = self.rng.choice((10, 100, 1000))
+        caching = CACHING
         start = self._row()
 
         def cells_per_result() -> list[int]:
-            return [self.rng.randint(1, 4) for _ in range(self.rng.randint(0, 30))]
+            """Rows of one cell each, as many as a fixture next-rows."""
+            return [1] * self.rng.choice(FIXTURE_NEXT_ROWS_CELLS)
 
-        cpr = cells_per_result()
+        cpr: list[int] = []  # the fixture's open-scanner responses hold no rows
         t = self._rpc(
             conn, t, cid, "Scan",
             wire.scan_open_request(rg, start, start + b"~", caching),
@@ -285,8 +319,9 @@ class _Builder:
             wire.scan_response(cpr, sid),
             {"method": "open-scanner", "scanner": sid, "cells": sum(cpr)},
             {"method": "open-scanner", "table": table, "region": region,
+             "row": start.decode(), "stoprow": start.decode() + "~",
              "req_cells": 0, "resp_cells": sum(cpr)})
-        for _ in range(self.rng.randint(1, 4)):
+        for _ in range(self.rng.choice(NEXT_ROWS_PER_SESSION)):
             cid += 1
             t += self.rng.randint(100, 5_000)
             cpr = cells_per_result()
@@ -331,7 +366,7 @@ class _Builder:
             resps.append(resp)
             self._record(conn, req, resp,
                          {"method": "get", "table": table, "region": region,
-                          "req_cells": q, "resp_cells": k})
+                          "row": row.decode(), "req_cells": q, "resp_cells": k})
         conn.sends.append((t, True, reqs))
         conn.sends.append((t + lat, False, resps))
         return t + lat, cid + n - 1
@@ -350,16 +385,17 @@ class _Builder:
                     self.servers[c % len(self.servers)])
         t = BASE_US + self.rng.randrange(span_us // 4)
         cid = 0
+        kinds, weights = zip(*OP_WEIGHTS)
         while cid < rpcs:
             cid += 1
-            r = self.rng.random()
-            if r < 0.35:
+            kind = self.rng.choices(kinds, weights)[0]
+            if kind == "get":
                 t = self.get(conn, t, cid)
-            elif r < 0.60:
+            elif kind == "put":
                 t = self.put(conn, t, cid)
-            elif r < 0.75:
+            elif kind == "multi":
                 t = self.multi(conn, t, cid)
-            elif r < 0.90:
+            elif kind == "scan":
                 t, cid = self.scan_session(conn, t, cid)
             else:
                 t, cid = self.get_burst(conn, t, cid)

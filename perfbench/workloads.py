@@ -5,19 +5,22 @@ Every workload has the same life cycle:
 1. ``prepare``: draw the seeded traffic model and write its input files.
 2. Three set-ups, each starting a Spark session, building the engine and
    registering its input; ``setup_s`` is their median. The first also
-   launches the JVM and runs an untimed warm-up: every operation of a pass
-   on a small input, run concurrently, so no timed step pays first-use
-   compilation. The next two restart the context in that JVM, so the
+   launches the JVM; the next two restart the context in that JVM, so the
    median times what the engine does before its first query and excludes
-   the one-off JVM launch; a later change that moves work into engine
+   the one-off JVM launch. A later change that moves work into engine
    construction or table registration shows there.
-3. The timed loop: whole passes until ``seconds`` of measured time are
-   spent (at least one). A pass is the workload's unit of user-visible work; its
-   operations (table writes, queries, micro-batches) are the latency
-   samples. Every pass's output is checked outside the measured time.
-4. With tracing on, a second loop runs the same passes with every call
-   labelled by ``setJobDescription``; the stages of each label are read
-   from the status store and streaming progress from a listener.
+3. An untimed warm-up in the last context, so the timed steps do not pay
+   the first-use costs (Python workers, code generation) that a restarted
+   context brings.
+4. The timed loop: whole passes until ``seconds`` of measured time are
+   spent (at least one). A pass is the workload's unit of user-visible
+   work; its operations (table writes, queries) are the latency samples.
+   Every pass's output is checked outside the measured time.
+5. With tracing on, the loop instead alternates untraced passes with
+   traced ones, whose every call is labelled by ``setJobDescription`` so
+   its stages can be read from the status store; then the workload's
+   layer probes run (cumulative prefixes of the dataflow, and for
+   ``table_sql`` a streaming replay watched by a listener).
 
 A timed operation always computes its full result: a parquet write or the
 ``collect()`` of a small result, never a ``.count()``.
@@ -29,7 +32,6 @@ import os
 import shutil
 import statistics
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -72,8 +74,10 @@ def _checksum(df: DataFrame) -> int:
 class Workload:
     name = ""
     rpcs = 0          # request/response pairs in the measured input
-    warm_rpcs = 150   # ... and in the warm-up input
     ops_per_pass = 0  # operations (latency samples) in one pass
+    # per-layer metric prefixes of layers the workload never calls; the
+    # traced run reports them as 0 and names them in its detail line
+    unreached: tuple[str, ...] = ()
 
     def __init__(self, seed: int, work: str, rpcs: int | None = None,
                  cpus: int = CPUS):
@@ -81,13 +85,11 @@ class Workload:
         self.work = work
         self.cpus = cpus
         self.model = traffic.build(seed, rpcs or self.rpcs)
-        self.truth = checks.summary(self.model.tables)
-        self.warm_model = traffic.build(seed + 1_000_003, self.warm_rpcs,
-                                        conns=8)
         self.spark = None
         self.engine = None
         self.tree: probes.ProcTree | None = None
         self.passes = 0
+        self.probe_checks: dict[str, list[str]] = {}  # probe -> bad tables
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
@@ -100,9 +102,12 @@ class Workload:
     def prepare(self) -> None:
         raise NotImplementedError
 
-    def set_up(self, first: bool) -> None:
-        """Register the input; in the first set-up also warm up: every
-        operation of a pass, concurrently, on the small input."""
+    def set_up(self) -> None:
+        """Register the input with the fresh engine."""
+
+    def warm_up(self) -> None:
+        """Untimed operations of a pass, so the timed ones do not pay
+        first-use costs; leaves the measured input registered."""
         raise NotImplementedError
 
     def run_pass(self, traced: bool) -> Pass:
@@ -113,22 +118,17 @@ class Workload:
 
     # shared ------------------------------------------------------------
 
-    def start(self, first: bool) -> float:
-        """One set-up (session, engine, input registration; the first
-        also warms up). Returns seconds."""
+    def start(self) -> float:
+        """One set-up: session, engine, input registration. Returns
+        seconds."""
         t0 = time.perf_counter()
         if self.spark is not None:
             self.spark.stop()
         self.spark = get_spark("perfbench", self.cpus)
         self.spark.sparkContext.setLogLevel("ERROR")
         self.engine = Engine(self.spark)
-        self.set_up(first)
+        self.set_up()
         return time.perf_counter() - t0
-
-    def concurrently(self, fns) -> list:
-        with ThreadPoolExecutor(self.cpus) as ex:
-            futures = [ex.submit(f) for f in fns]
-            return [f.result() for f in futures]
 
     def label(self, name: str | None) -> None:
         self.spark.sparkContext.setJobDescription(name)
@@ -144,12 +144,18 @@ class Workload:
         self.label(None)
         return win.close()[0] if win else 0.0
 
-    def check_tables(self, out: str) -> tuple[dict, list[str]]:
-        """Summary of the tables written under ``out`` and the names of
-        those that differ from the ground truth; removes ``out``."""
-        got = checks.summary(checks.read_tables(out))
+    def check_tables(self, out: str, want: dict, from_pcap: bool
+                     ) -> tuple[dict, list[str], int]:
+        """Reads back the tables written under ``out`` and removes it.
+        Returns their summary, the names of those that differ from the
+        expected rows ``want``, and how many timestamps the pcap reader
+        truncated (see ``checks.snap_truncated_ts``)."""
+        got = checks.read_tables(out)
         shutil.rmtree(out)
-        return got, [t for t in checks.TABLES if got[t] != self.truth[t]]
+        cut = 0
+        if from_pcap:
+            got, cut = checks.snap_truncated_ts(got, want)
+        return checks.summary(got), checks.diff_tables(got, want), cut
 
     def ledger_per_pass(self, layer: str, stage_rows: list[dict],
                         traced_passes: list[Pass]) -> dict[str, float]:
@@ -166,11 +172,14 @@ class PcapIngest(Workload):
     correlation -> the four tables written to parquet."""
     name = "pcap_ingest"
     rpcs = 2_500
+    warm_rpcs = 40    # request/response pairs in the warm-up capture
     ops_per_pass = len(checks.TABLES)
+    unreached = ("engine.sql.", "streaming.")
 
     def prepare(self) -> None:
         traffic.write_pcaps(self.model, self.path("pcap"))
-        traffic.write_pcaps(self.warm_model, self.path("warm_pcap"))
+        warm = traffic.build(self.seed + 1_000_003, self.warm_rpcs, conns=8)
+        traffic.write_pcaps(warm, self.path("warm_pcap"))
 
     def _load(self, capture: str) -> Engine:
         return (Engine(self.spark)
@@ -182,12 +191,12 @@ class PcapIngest(Workload):
         eng.tables[table].write.mode("overwrite").parquet(f"{out}/{table}")
         return (time.perf_counter() - t0) * 1000
 
-    def set_up(self, first: bool) -> None:
-        if first:
-            eng = self._load(self.path("warm_pcap", "*.pcap"))
-            self.concurrently(
-                lambda t=t: self._write(eng, t, self.path("warm_out"))
-                for t in checks.TABLES)
+    def warm_up(self) -> None:
+        """One table write on a small capture: a pass's first-use costs
+        are the same for every table, and four writes would double the
+        run's fixed time."""
+        eng = self._load(self.path("warm_pcap", "*.pcap"))
+        self._write(eng, "results", self.path("warm_out"))
 
     def run_pass(self, traced: bool) -> Pass:
         out = self.path("out", str(self.passes))
@@ -198,9 +207,10 @@ class PcapIngest(Workload):
         ops = [self._write(eng, t, out) for t in checks.TABLES]
         wall = time.perf_counter() - t0
         cpu_ms = self.close_window(win)
-        got, bad = self.check_tables(out)
+        got, bad, cut = self.check_tables(out, self.model.tables, True)
         return Pass(wall, ops, len(bad),
-                    {"summary": got, "bad": bad, "proc_cpu_ms": cpu_ms})
+                    {"summary": got, "bad": bad, "proc_cpu_ms": cpu_ms,
+                     "ts_truncated": cut})
 
     def layer_metrics(self, traced_passes: list[Pass]) -> dict[str, float]:
         """Cumulative prefixes of the file-mode dataflow, each forced by a
@@ -252,18 +262,26 @@ class TableSql(Workload):
     name = "table_sql"
     rpcs = 4_000
     ops_per_pass = len(checks.QUERIES)
+    unreached = ("sources.", "operators.reassembly.", "engine.tables.")
+    stream_rpcs = 300  # the streaming probe's own model ...
+    stream_files = 3   # ... replayed one part file per trigger
 
     def prepare(self) -> None:
         traffic.write_events(self.model, self.path("events"))
-        traffic.write_events(self.warm_model, self.path("warm_events"))
         self.expected = checks.expected_results(self.model.tables)
+        self.stream_model = traffic.build(self.seed + 2_000_003,
+                                          self.stream_rpcs, conns=8)
+        traffic.write_stream_parts(self.stream_model, self.path("parts"),
+                                   self.stream_files)
 
-    def set_up(self, first: bool) -> None:
-        if first:
-            self.engine.load_events(self.path("warm_events")).register_tables()
-            self.concurrently(lambda sql=sql: self.engine.sql(sql).collect()
-                              for sql in checks.QUERIES.values())
+    def set_up(self) -> None:
         self.engine.load_events(self.path("events")).register_tables()
+
+    def warm_up(self) -> None:
+        """One untimed pass: a pass on the small input left the first
+        timed pass a quarter slower than the next."""
+        for sql in checks.QUERIES.values():
+            self.engine.sql(sql).collect()
 
     def run_pass(self, traced: bool) -> Pass:
         label = f"engine.sql:{self.passes}" if traced else None
@@ -322,85 +340,58 @@ class TableSql(Workload):
         views = {t: [r.asDict() for r in self.spark.table(t).collect()]
                  for t in checks.TABLES}
         out.update(checks.outcome(checks.summary(views)))
+        out.update(self.stream_probe())
         return out
 
-
-class StreamReplay(Workload):
-    """Streaming file replay: time-ordered part files, one per trigger,
-    through the stateful correlation into the four parquet tables.
-
-    Run it by name; it is not among BENCHMARK.json's workloads because a
-    micro-batch takes about 7 s on 4 cores, so its runs do not fit the
-    benchmark's time budget."""
-    name = "stream_replay"
-    rpcs = 1_200
-    files = 6
-
-    @property
-    def ops_per_pass(self) -> int:
-        return self.files
-
-    def prepare(self) -> None:
-        traffic.write_stream_parts(self.model, self.path("parts"), self.files)
-        traffic.write_stream_parts(self.warm_model, self.path("warm_parts"), 2)
-        self.progress = probes.Progress()
-
-    def _replay(self, src: str, out: str, files: int) -> list:
-        streaming.run_pipeline_to_parquet(self.spark, src, out,
+    def stream_probe(self) -> dict[str, float]:
+        """The streaming layer: the probe's part files replayed one per
+        trigger by ``run_pipeline_to_parquet``, each micro-batch's progress
+        taken from a listener, the written tables checked against the
+        probe's model. Its first micro-batch pays the stateful operator's
+        first-use costs."""
+        progress = probes.Progress()
+        self.spark.streams.addListener(progress)
+        out = self.path("stream_out")
+        win = probes.CpuWindow(self.tree)
+        streaming.run_pipeline_to_parquet(self.spark, self.path("parts"), out,
                                           max_files_per_trigger=1)
-        return self.progress.wait_for(files)
-
-    def set_up(self, first: bool) -> None:
-        self.spark.streams.addListener(self.progress)
-        if first:
-            self._replay(self.path("warm_parts"), self.path("warm_out"), 2)
-
-    def run_pass(self, traced: bool) -> Pass:
-        out = self.path("out", str(self.passes))
-        self.passes += 1
-        win = self.open_window(traced, "streaming")
-        t0 = time.perf_counter()
-        batches = self._replay(self.path("parts"), out, self.files)
-        wall = time.perf_counter() - t0
-        cpu_ms = self.close_window(win)
-        got, bad = self.check_tables(out)
-        if len(batches) != self.files:
+        cpu_ms = win.close()[0]
+        batches = progress.wait_for(self.stream_files)
+        self.spark.streams.removeListener(progress)
+        _, bad, _ = self.check_tables(out, self.stream_model.tables, False)
+        if len(batches) != self.stream_files:
             bad.append("batches")
-        ops = [float(b.durationMs.get("triggerExecution", 0)) for b in batches]
-        return Pass(wall, ops, len(bad), {"summary": got, "bad": bad,
-                                          "batches": batches,
-                                          "proc_cpu_ms": cpu_ms})
-
-    def layer_metrics(self, traced_passes: list[Pass]) -> dict[str, float]:
-        batches = [b for p in traced_passes for b in p.info["batches"]]
-        n = len(traced_passes)
+        self.probe_checks["streaming"] = bad
 
         def p50(key: str) -> float:
             return _median([float(b.durationMs.get(key, 0)) for b in batches])
 
         ops = [s for b in batches for s in b.stateOperators]
-        out = {
-            "streaming.batches": len(batches) / n,
-            "streaming.input_rows": sum(b.numInputRows for b in batches) / n,
+        run_ids = {str(b.runId) for b in batches}
+        stage_rows = probes.stages(self.spark, lambda d: any(
+            f"runId = {r}" in d for r in run_ids))
+        met = {f"streaming.{k}": v
+               for k, v in probes.ledger(stage_rows).items()}
+        met.update({
+            "streaming.proc_cpu_ms": cpu_ms,
+            "streaming.batches": len(batches),
+            "streaming.input_rows": sum(b.numInputRows for b in batches),
+            "streaming.trigger_ms_p50": p50("triggerExecution"),
             "streaming.add_batch_ms_p50": p50("addBatch"),
             "streaming.query_planning_ms_p50": p50("queryPlanning"),
             "streaming.get_batch_ms_p50": p50("getBatch"),
             "streaming.latest_offset_ms_p50": p50("latestOffset"),
             "streaming.wal_commit_ms_p50": p50("walCommit"),
-            "streaming.state_rows_peak": max((s.numRowsTotal for s in ops), default=0),
+            "streaming.state_rows_peak":
+                max((s.numRowsTotal for s in ops), default=0),
             "streaming.state_memory_bytes_peak":
                 max((s.memoryUsedBytes for s in ops), default=0),
             "streaming.state_update_ms_total":
-                sum(s.allUpdatesTimeMs for s in ops) / n,
+                sum(s.allUpdatesTimeMs for s in ops),
             "streaming.state_rows_removed_total":
-                sum(s.numRowsRemoved for s in ops) / n,
-        }
-        run_ids = {str(b.runId) for b in batches}
-        stage_rows = probes.stages(self.spark, lambda d: any(
-            f"runId = {r}" in d for r in run_ids))
-        out.update(self.ledger_per_pass("streaming", stage_rows, traced_passes))
-        out.update(checks.outcome(traced_passes[-1].info["summary"]))
-        return out
+                sum(s.numRowsRemoved for s in ops),
+        })
+        return met
 
 
-WORKLOADS = {w.name: w for w in (PcapIngest, TableSql, StreamReplay)}
+WORKLOADS = {w.name: w for w in (PcapIngest, TableSql)}
