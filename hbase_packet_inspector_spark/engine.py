@@ -2,7 +2,8 @@
 CLI's three modes (reference core.clj:499-517, SURVEY.md §3):
 
 - file mode   (`hpi dump.pcap` -> H2 tables -> SQL shell):
-    ``Engine.load_events(path).register_tables()`` then ``Engine.sql(...)``
+    ``Engine.load_pcap(path).register_tables()`` (or ``load_events`` for
+    pre-decoded rpc_events) then ``Engine.sql(...)``
 - live mode   (NIC capture -> same tables):
     ``Engine.stream(source_dir)`` — Structured Streaming with the same
     operators; capture itself stays an external agent (pcap has no
@@ -24,9 +25,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators.pipeline import build_tables
+from .operators.pipeline import correlate, finalize, route, scanner_enrich
 from .operators.reassembly import reassemble
-from .schema import ACTION_STRUCT, RESULT_STRUCT, RPC_EVENT_SCHEMA, TCP_CHUNK_SCHEMA
+from .schema import (
+    ACTION_STRUCT,
+    RESULT_STRUCT,
+    RPC_EVENT_SCHEMA,
+    STATE_EXPIRATION_MS,
+    TCP_CHUNK_SCHEMA,
+)
 from .session import tune_session
 from .streaming.sink import parse_kafka_spec, to_kafka_records
 
@@ -86,6 +93,8 @@ class Engine:
         self.spark = tune_session(spark)
         self.tables: dict[str, DataFrame] = {}
         self._events: DataFrame | None = None
+        # set by load_pcap: register_tables then checkpoints the capture
+        self._from_pcap = False
 
     # -- ingestion ------------------------------------------------------
 
@@ -94,6 +103,7 @@ class Engine:
         raw pcap decode is an edge adapter, SURVEY.md §7). ``fmt='kafka-json'``
         reads files of sink-payload JSON lines — what a consumer dumps from
         the reference's Kafka topics — via the inverse sink transform."""
+        self._from_pcap = False
         if isinstance(source, DataFrame):
             self._events = source
         elif fmt == "parquet":
@@ -124,7 +134,10 @@ class Engine:
         decoder (``sources.hbase_decode`` — pure-Python wire format, no
         google.protobuf), validated against the reference's own pcap
         fixtures; ``decode='json'`` parses framed payloads as JSON event
-        bodies (the synthetic-capture seam; see MESSAGE_BODY_SCHEMA)."""
+        bodies (the synthetic-capture seam; see MESSAGE_BODY_SCHEMA).
+
+        The events stay lazy here; ``register_tables`` derives the capture
+        once for all four tables."""
         from .sources import pcap as P
 
         packets = P.read_pcap(self.spark, path)
@@ -137,6 +150,7 @@ class Engine:
             self._events = decode_json_messages(messages)
         else:
             raise ValueError(f"unsupported decoder: {decode}")
+        self._from_pcap = True
         return self
 
     def load_tcp_chunks(self, source: str | DataFrame) -> DataFrame:
@@ -175,10 +189,32 @@ class Engine:
         return self
 
     def register_tables(self, ttl_ms: int | None = None) -> "Engine":
+        """Correlate -> scanner-enrich -> finalize the loaded events and
+        register the four routed tables as temp views.
+
+        After ``load_pcap`` the capture is derived once per call: the
+        finalized frame (the last frame the four tables share) is
+        local-checkpointed lazily. AQE runs its shuffle-map stages (pcap
+        scan, reassembly, decode, correlation) while this call plans it,
+        the first table action computes the last stage into the
+        checkpoint, and every table reads its blocks from then on. A local
+        checkpoint, unlike ``cache()``, is not matched by plan, so a later
+        load of the same (rotated) path never reads these blocks, and the
+        ContextCleaner frees them once the tables are dropped. Its blocks
+        do not survive a lost executor — the same trade the capture memo
+        and the graph round frames make.
+
+        After ``load_events`` the tables stay lazy views that submit no job
+        here: under AQE even a lazy checkpoint runs its shuffle-map stages
+        when it is planned, which would move both correlation shuffles into
+        this call for a source that is cheap to read again."""
         if self._events is None:
             raise RuntimeError("call load_events() first")
-        kwargs = {} if ttl_ms is None else {"ttl_ms": ttl_ms}
-        self.tables = build_tables(self._events, **kwargs)
+        ttl = STATE_EXPIRATION_MS if ttl_ms is None else ttl_ms
+        finalized = finalize(scanner_enrich(correlate(self._events, ttl), ttl))
+        if self._from_pcap:
+            finalized = finalized.localCheckpoint(eager=False)
+        self.tables = route(finalized)
         for name, df in self.tables.items():
             df.createOrReplaceTempView(name)
         return self
@@ -248,8 +284,6 @@ class Engine:
         (core.clj:261-283) — so the full pipeline runs here; multi records
         keep their stamped actions/results arrays embedded, exactly as the
         reference ships them."""
-        from .operators.pipeline import correlate, finalize, scanner_enrich
-
         cfg = parse_kafka_spec(spec)
         src = df if df is not None else self._events
         if src is None:

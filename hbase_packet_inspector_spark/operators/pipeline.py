@@ -62,32 +62,28 @@ def correlate(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> DataFrame
     gap_ms = F.unix_millis(F.col("ts")) - F.unix_millis(prev_ts)
     matched = prev_inbound & (gap_ms <= ttl_ms)
 
+    # one projection per dependency level: a withColumn per column would
+    # re-analyze the growing plan on the driver once per column
     df = events.withColumn("_matched", F.coalesce(matched, F.lit(False)))
-    df = df.withColumn(
-        "elapsed",
-        F.when(~F.col("inbound") & F.col("_matched"), gap_ms.cast("int")),
-    )
-    for c in _REQ_MERGE_COLS:
-        df = df.withColumn(
-            f"_req_{c}",
-            F.when(~F.col("inbound") & F.col("_matched"), F.lag(c).over(w)),
-        )
+    answered = ~F.col("inbound") & F.col("_matched")
+    df = df.withColumns({
+        "elapsed": F.when(answered, gap_ms.cast("int")),
+        **{f"_req_{c}": F.when(answered, F.lag(c).over(w))
+           for c in _REQ_MERGE_COLS},
+    })
     # Response-side merge: response's own value wins where present
     # (hbase.clj:74-84 merge order), request fills the rest; a response
     # without a match keeps nulls and method='unknown' (B9).
-    for c in _REQ_MERGE_COLS:
-        df = df.withColumn(
-            c,
-            F.when(F.col("inbound"), F.col(c)).otherwise(
-                F.coalesce(F.col(c), F.col(f"_req_{c}"))
-            ),
+    merged = {
+        c: F.when(F.col("inbound"), F.col(c)).otherwise(
+            F.coalesce(F.col(c), F.col(f"_req_{c}"))
         )
-    df = df.withColumn(
-        "method",
-        F.when(~F.col("inbound") & ~F.col("_matched"), F.lit("unknown")).otherwise(
-            F.col("method")
-        ),
-    )
+        for c in _REQ_MERGE_COLS
+    }
+    merged["method"] = F.when(
+        ~F.col("inbound") & ~F.col("_matched"), F.lit("unknown")
+    ).otherwise(merged["method"])
+    df = df.withColumns(merged)
     return df.drop(*[f"_req_{c}" for c in _REQ_MERGE_COLS])
 
 
@@ -134,8 +130,10 @@ def scanner_enrich(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> Data
     last_state = F.last(state, ignorenulls=True).over(ws)
     scoped = (
         scoped.withColumn("_state", last_state)
-        .withColumn("table", F.coalesce(F.col("table"), F.col("_state.t")))
-        .withColumn("region", F.coalesce(F.col("region"), F.col("_state.r")))
+        .withColumns({
+            "table": F.coalesce(F.col("table"), F.col("_state.t")),
+            "region": F.coalesce(F.col("region"), F.col("_state.r")),
+        })
         .drop("_state", "_session")
     )
     return scoped.unionByName(rest)
@@ -185,12 +183,14 @@ def finalize(events: DataFrame) -> DataFrame:
         F.col("results").isNotNull() & F.col("actions").isNotNull(),
         zip_actions_results(F.col("actions"), F.col("results")),
     ).otherwise(F.col("results"))
-    df = events.withColumn("_results", merged_results)
-    df = df.withColumn(
-        "batch",
-        F.when(F.col("actions").isNotNull(), F.size("actions")).otherwise(F.lit(0)),
-    )
+    df = events.withColumns({
+        "_results": merged_results,
+        "batch": F.when(F.col("actions").isNotNull(), F.size("actions"))
+        .otherwise(F.lit(0)),
+    })
 
+    # every column below reads the record as it came in (plus _results and
+    # batch), so they form one projection
     results_sum = F.when(
         ~F.col("inbound") & F.col("_results").isNotNull(),
         sum_child_cells(F.col("_results")),
@@ -198,25 +198,20 @@ def finalize(events: DataFrame) -> DataFrame:
     actions_sum = F.when(
         F.col("actions").isNotNull(), sum_child_cells(F.col("actions"))
     )
-    df = df.withColumn(
-        "cells",
-        F.coalesce(F.col("cells"), results_sum, actions_sum, F.lit(0)).cast("int"),
-    )
-
     single = F.col("batch") == 1
     first = F.col("actions")[0]
-    for c in ("method", "table", "region", "row", "durability"):
-        df = df.withColumn(
-            c, F.when(single, F.coalesce(first[c], F.col(c))).otherwise(F.col(c))
-        )
-
     multi = F.col("batch") > 1
-    df = df.withColumn(
-        "actions", F.when(multi & F.col("inbound"), _stamped(F.col("actions"), False))
-    )
-    df = df.withColumn(
-        "results", F.when(multi & ~F.col("inbound"), _stamped(F.col("_results"), True))
-    )
+    df = df.withColumns({
+        "cells": F.coalesce(
+            F.col("cells"), results_sum, actions_sum, F.lit(0)
+        ).cast("int"),
+        **{c: F.when(single, F.coalesce(first[c], F.col(c))).otherwise(F.col(c))
+           for c in ("method", "table", "region", "row", "durability")},
+        "actions": F.when(multi & F.col("inbound"),
+                          _stamped(F.col("actions"), False)),
+        "results": F.when(multi & ~F.col("inbound"),
+                          _stamped(F.col("_results"), True)),
+    })
     return df.drop("_results", "_matched")
 
 

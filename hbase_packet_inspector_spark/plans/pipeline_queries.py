@@ -479,10 +479,14 @@ _HBASE_FIXDIR = "/root/reference/dev-resources"
 # sessions and their checkpointed tables are never pinned for process
 # lifetime; the session object rides in the value so a recycled id()
 # can never serve stale tables. The third slot records the RDD ids
-# backing the memo's localCheckpoint (lazy checkpointing persists the
-# RDD at PLAN time — verified on this Spark build — so the ids are
-# known before any action runs): revalidation checks id-presence in
-# the context's persistent-RDD map, a pure driver-side JVM call, NOT a
+# backing the tables' localCheckpoint, which Engine.register_tables
+# takes on the finalized capture. A lazy checkpoint registers its RDD
+# when it is planned, so the ids are known as soon as register_tables
+# returns; under AQE that planning also runs the shuffle-map stages
+# (pcap scan, reassembly, decode and the correlation shuffles), so the
+# memo MISS pays the derivation there and the first action computes
+# only the last stage into the checkpoint. Revalidation checks id-presence in the
+# context's persistent-RDD map, a pure driver-side JVM call, NOT a
 # Spark job, and exactly the condition the one observed failure mode
 # (an external unpersist sweep) violates.
 _HBASE_CAPTURE_MEMO: list[tuple[SparkSession, dict, frozenset]] = []
@@ -522,7 +526,7 @@ def _load_hbase_capture(spark: SparkSession):
     pipeline (pcap scan -> reassembly -> decode -> correlation) runs and
     the same four tables register, so every projection keeps its schema
     on fixture-less deployments."""
-    import os
+    import tempfile
 
     from ..engine import Engine
 
@@ -565,16 +569,14 @@ def _load_hbase_capture(spark: SparkSession):
             else:
                 pkts.append((r["ts"].timestamp(), r["server"], 16020,
                              r["client"], r["port"], frame))
-        tmp = "/tmp/_hpi_synth.pcap"
+        # Spark's file index skips names starting with '_' or '.'
+        tmp = os.path.join(tempfile.mkdtemp(prefix="hpi-synth-"), "synth.pcap")
         with open(tmp, "wb") as f:
             f.write(P.build_pcap(pkts))
         eng.load_pcap(tmp, ports=(16020,), decode="json")
-    # cut the decode lineage (lazily — building the frame must not run
-    # the decode; the first action materializes it once) so both queries'
-    # rollups and any repeat run in the same session read checkpointed
-    # rows instead of re-running the Python decode
+    # register_tables checkpoints the finalized capture; the diff names
+    # that checkpoint's RDDs for revalidation
     before = _persistent_rdd_ids(spark)
-    eng._events = eng._events.localCheckpoint(eager=False)
     tables = eng.register_tables().tables
     ids = frozenset(_persistent_rdd_ids(spark) - before)
     _HBASE_CAPTURE_MEMO[:] = [(spark, tables, ids)]

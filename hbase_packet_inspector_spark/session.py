@@ -81,6 +81,11 @@ def get_spark(app_name: str = "hpi-spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging stamps the Python call site on every
+        # Column function call: ~10 driver<->JVM round trips each, which
+        # made building the capture pipeline ~4000 round trips. Static conf,
+        # so only a session built here can turn it off.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     _ship_package(spark)

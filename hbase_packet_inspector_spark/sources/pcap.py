@@ -125,7 +125,7 @@ def _parse_pcap_bytes(path: str, blob: bytes) -> Iterator[dict]:
         end, magic = ">", magic_be
     else:
         return  # not a classic-pcap file
-    ts_div = 1e6 if magic == MAGIC_US else 1e9
+    ns = magic == MAGIC_NS
     linktype = struct.unpack_from(end + "I", blob, 20)[0]
 
     off = 24
@@ -143,8 +143,9 @@ def _parse_pcap_bytes(path: str, blob: bytes) -> Iterator[dict]:
 
         # truncate to whole microseconds: Spark timestamps are µs and the
         # Arrow serializer REFUSES a lossy ns -> µs cast, so a nanosecond
-        # capture (magic 0xa1b23c4d) would otherwise abort the decode stage
-        frac_us = int(ts_frac / ts_div * 1e6)
+        # capture (magic 0xa1b23c4d) would otherwise abort the decode stage.
+        # Integer math: a float round trip reads e.g. 249 µs as 248.
+        frac_us = ts_frac // 1000 if ns else ts_frac
         ts = pd.Timestamp(ts_sec, unit="s") + pd.Timedelta(frac_us, unit="us")
         row = _frame_to_row(path, pkt_idx, ts, linktype, frame)
         if row is not None:

@@ -195,3 +195,69 @@ def test_cli_dataprep_and_list(capsys):
 
     rc = main(["--dataprep", "no_such_query"])
     assert rc == 2
+
+
+def _fixture_capture(tmp_path) -> str:
+    """The fixture workloads as a JSON-framed pcap (decode='json'):
+    gets, a 100-put multi and a scanner session, so all four tables
+    have rows."""
+    import json as _json
+    import struct as _st
+
+    from hbase_packet_inspector_spark.engine import MESSAGE_BODY_SCHEMA
+    from hbase_packet_inspector_spark.sources import pcap as P
+
+    rows = fx.random_read() + fx.sequential_write() + [
+        dict(r, port=41000) for r in fx.scan()
+    ]
+    keys = MESSAGE_BODY_SCHEMA.fieldNames()
+    pkts = []
+    for r in rows:
+        body = _json.dumps({k: r[k] for k in keys if r.get(k) is not None})
+        frame = _st.pack(">i", len(body)) + body.encode()
+        ends = [(r["client"], r["port"]), (r["server"], 16020)]
+        if not r["inbound"]:
+            ends.reverse()
+        pkts.append((r["ts"].timestamp(), *ends[0], *ends[1], frame))
+    path = tmp_path / "fixtures.pcap"
+    path.write_bytes(P.build_pcap(pkts))
+    return str(path)
+
+
+def _multiset(df) -> list[str]:
+    return sorted(repr(r.asDict(recursive=True)) for r in df.collect())
+
+
+def test_file_mode_derives_capture_once(spark, tmp_path):
+    """After load_pcap, every table reads the checkpointed finalized frame:
+    no Python-worker stage (pcap scan, reassembly, decode) is left in any
+    table's plan, and the rows equal the uncheckpointed pipeline's."""
+    from hbase_packet_inspector_spark.operators.pipeline import build_tables
+
+    path = _fixture_capture(tmp_path)
+    eng = Engine(spark).load_pcap(path, ports=(16020,), decode="json")
+    want = build_tables(eng._events)
+    eng.register_tables()
+    assert set(eng.tables) == set(want)
+    for name, df in eng.tables.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan, name
+        assert "FlatMapGroupsInPandas" not in plan, name
+        got = _multiset(df)
+        assert got and got == _multiset(want[name]), name
+
+
+def test_events_mode_register_submits_no_job(spark, tmp_path):
+    path = str(tmp_path / "ev")
+    fx.to_df(spark, fx.random_read() + fx.scan()).write.parquet(path)
+    eng = Engine(spark).load_events(path)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    eng.register_tables()
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_own_session_skips_dataframe_call_site_capture(spark):
+    """get_spark turns off PySpark's per-Column call-site capture, which
+    cost ~10 driver<->JVM round trips per Column function call."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

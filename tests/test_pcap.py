@@ -296,3 +296,18 @@ def test_pcapng_spb_respects_idb_snaplen():
     rows = list(P._parse_capture_bytes("p", blob))
     assert len(rows) == 1
     assert bytes(rows[0]["data"]) == payload[:4]  # not payload[:4]+b"\0\0"
+
+
+def test_classic_pcap_ts_fraction_is_exact():
+    """Sub-second fractions convert with integer math: through a float,
+    249 µs read as 248 and 256229000 ns as 256228 µs."""
+    import pandas as pd
+
+    pkt = [(1000.0, CLIENT, CPORT, SERVER, SPORT, b"x")]
+    for nanos, frac, want_us in ((False, 249, 249),
+                                 (True, 256_229_000, 256_229)):
+        blob = bytearray(P.build_pcap(pkt, nanos=nanos))
+        struct.pack_into("<I", blob, 24 + 4, frac)  # first record's ts_frac
+        (row,) = P._parse_capture_bytes("p", bytes(blob))
+        assert row["ts"] == pd.Timestamp(1000, unit="s") + pd.Timedelta(
+            want_us, unit="us")

@@ -3,7 +3,8 @@
 Runs every queries() entry on Spark and its oracle_sql() on DuckDB over the
 same parquet tables, then compares row count, column names, and an
 order-insensitive value multiset (timestamps normalized to isoformat,
-floats to repr). Usage:
+floats to repr). A query without an oracle is a rows-only SKIP, counted in
+the summary; a rows-only query that returns 0 rows is a FAIL. Usage:
 
     python tools/check_parity.py [sf_dir] [query ...]
     python tools/check_parity.py --changed-since REF [sf_dir]
@@ -138,7 +139,7 @@ def main():
             print(f"# --changed-since {since}: {len(sel)} selected, "
                   f"{skipped} SKIPPED (not full coverage)")
             if not sel:
-                print("\n0 passed, 0 failed")
+                print("\n0 passed, 0 failed, 0 skipped (rows-only)")
                 return 0
             only = sel
     spark = get_spark("parity-check")
@@ -148,7 +149,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_skip = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -162,7 +163,15 @@ def main():
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"SKIP {name}: rows-only ({len(srows)} rows) [{time.time()-t0:.1f}s]")
+            # rows-only: nothing to compare, but an empty result is no run
+            if not srows:
+                print(f"FAIL {name}: rows-only query returned 0 rows "
+                      f"[{time.time()-t0:.1f}s]")
+                n_fail += 1
+            else:
+                print(f"SKIP {name}: rows-only ({len(srows)} rows) "
+                      f"[{time.time()-t0:.1f}s]")
+                n_skip += 1
             continue
         try:
             res = con.execute(oracles[name])
@@ -209,7 +218,7 @@ def main():
         # queries' caches otherwise tax later ones with GC pressure)
         spark.catalog.clearCache()
 
-    print(f"\n{n_pass} passed, {n_fail} failed")
+    print(f"\n{n_pass} passed, {n_fail} failed, {n_skip} skipped (rows-only)")
     spark.stop()
     return 1 if n_fail else 0
 
