@@ -318,19 +318,11 @@ def build_pcap(
     nanos: bool = False,
 ) -> bytes:
     """Serialize (ts_epoch_sec, src_ip, src_port, dst_ip, dst_port, payload)
-    tuples into a classic-pcap byte string (Ethernet or raw-IP framing,
-    zeroed checksums — parsers don't verify them)."""
+    tuples into a classic-pcap byte string (Ethernet or raw-IP framing)."""
     magic = MAGIC_NS if nanos else MAGIC_US
     out = bytearray(struct.pack("<IHHiIII", magic, 2, 4, 0, 0, 65535, linktype))
     for ts, src_ip, sport, dst_ip, dport, payload in packets:
-        ip_src = bytes(int(x) for x in src_ip.split("."))
-        ip_dst = bytes(int(x) for x in dst_ip.split("."))
-        tcp = struct.pack(">HHIIBBHHH", sport, dport, 0, 0, 5 << 4, 0x18, 65535, 0, 0)
-        total = 20 + len(tcp) + len(payload)
-        ip = struct.pack(">BBHHHBBH", 0x45, 0, total, 0, 0, 64, 6, 0) + ip_src + ip_dst
-        frame = ip + tcp + bytes(payload)
-        if linktype == LINKTYPE_ETHERNET:
-            frame = b"\x02" * 6 + b"\x04" * 6 + struct.pack(">H", 0x0800) + frame
+        frame = _tcp_frame(src_ip, sport, dst_ip, dport, payload, linktype)
         frac = round((ts - int(ts)) * (1e9 if nanos else 1e6))
         out += struct.pack("<IIII", int(ts), int(frac), len(frame), len(frame))
         out += frame

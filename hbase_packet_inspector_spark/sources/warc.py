@@ -17,11 +17,10 @@ Format handling (pure stdlib, no external deps):
 - malformed tails degrade to fewer records, never an exception (the pcap
   garbage-never-raises discipline).
 
-Scale shape — the pcap_datasource precedent: planning-time listing makes
-one InputPartition per archive file (WARC framing is sequential; the file
-is the split unit, exactly how distributed Common Crawl jobs shard), so a
-100k-file crawl dump fans out across executors with per-file retry and
-speculation; rows stream lazily out of the parser — ``parse_warc_stream``
+Scale shape — planning-time listing makes one InputPartition per archive
+file (WARC framing is sequential; the file is the split unit, exactly how
+distributed Common Crawl jobs shard), so a 100k-file crawl dump fans out
+across executors with per-file retry and speculation; rows stream lazily out of the parser — ``parse_warc_stream``
 consumes the (gzip) stream incrementally, holding at most one record plus
 one read chunk in memory, so a ~1 GB ``.warc.gz`` that inflates to ~5 GB
 never materializes whole in a task.
@@ -458,7 +457,7 @@ class WarcDataSource(DataSource):
 
 def register(spark) -> None:
     # Python workers re-import this module by name; ship the package so
-    # registration works from any driver cwd (the pcap_datasource lesson)
+    # registration works from any working directory
     from ..session import _ship_package
 
     _ship_package(spark)

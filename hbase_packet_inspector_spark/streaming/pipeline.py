@@ -8,6 +8,12 @@ state: pending requests keyed by call_id, expired by event-time TTL against
 the connection's latest packet timestamp — the reference's exact expiry rule
 (core.clj:285-296: event time, not wall clock).
 
+Records cross the state boundary whole, as the reference hands each finished
+record to ``send!`` with its children (core.clj:261-283): every correlated row
+keeps its ``actions``/``results`` arrays, and a pending multi request holds
+its actions in state until its response inherits them or the TTL drops it.
+Each micro-batch therefore finalizes on its own rows, whatever the source.
+
 Batch/stream parity: tests/test_streaming.py replays the same fixture
 workloads through this operator and asserts the outputs match
 operators.pipeline.correlate.
@@ -27,15 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.pipeline import _REQ_MERGE_COLS, finalize, finalize_and_route
 from ..schema import RPC_EVENT_SCHEMA, STATE_EXPIRATION_MS
-
-# Request attributes carried across to the matched response (hbase.clj:74-84
-# — the request map merges UNDER the response map, so a mutate response with
-# no decoded cells inherits the request's).
-_MERGE_FIELDS = (
-    "method", "table", "region", "row", "stoprow", "cells", "durability",
-    "caching",
-)
 
 
 def _scalar(v):
@@ -44,17 +43,11 @@ def _scalar(v):
     return None if v is None or (isinstance(v, float) and v != v) else v
 
 # Output: the correlated event stream (requests unchanged; responses merged,
-# with elapsed; unknown responses flagged) — scanner enrichment and routing
-# run downstream in foreachBatch via the batch operators.
+# with elapsed; unknown responses flagged; scanner rows enriched) —
+# finalization and routing run downstream in foreachBatch via the batch
+# operators.
 CORRELATED_SCHEMA = T.StructType(
-    [f for f in RPC_EVENT_SCHEMA.fields if f.name not in ("actions", "results")]
-    + [
-        T.StructField("elapsed", T.IntegerType()),
-        # event_id of the matched request: lets the downstream batch rejoin
-        # the request's array columns (actions) without carrying arrays
-        # through the Arrow state boundary
-        T.StructField("req_event_id", T.LongType()),
-    ]
+    RPC_EVENT_SCHEMA.fields + [T.StructField("elapsed", T.IntegerType())]
 )
 
 _STATE_SCHEMA = T.StructType([T.StructField("pending", T.StringType())])
@@ -137,12 +130,9 @@ _WARNED_UNBOUNDED_STATE = False
 
 def _warn_unbounded_state(fn_name: str) -> None:
     """One-time heads-up that ``watermark=None`` means NO idle-connection
-    state eviction. The default changed from "2 minutes" to None in
-    round 10 (replay safety: a watermark default silently dropped
-    >2-min-late rows from archive replays); live deployments that relied
-    on the old default must now opt in explicitly or the state store
-    grows without bound. Emitted once per process, not per query, so
-    replay harnesses that build many bounded streams aren't spammed."""
+    state eviction: a live deployment must pass a watermark or the state
+    store grows without bound. Emitted once per process, not per query,
+    so replay harnesses that build many bounded streams aren't spammed."""
     global _WARNED_UNBOUNDED_STATE
     if _WARNED_UNBOUNDED_STATE:
         return
@@ -152,8 +142,7 @@ def _warn_unbounded_state(fn_name: str) -> None:
         "never evicted — fine for bounded archive replays "
         "(availableNow / finite file feeds), but a LIVE deployment "
         "must pass e.g. watermark='2 minutes' or state grows without "
-        "bound. (Default changed from '2 minutes' to None for replay "
-        "safety.)",
+        "bound.",
         stacklevel=3,
     )
 
@@ -203,40 +192,6 @@ def stream_correlate(
     )
 
 
-def _reattach_arrays(spark, source_dir: str, batch_df: DataFrame) -> DataFrame:
-    """Re-attach the array columns the Arrow state boundary dropped: own
-    results by event_id; the matched REQUEST's actions by req_event_id
-    (responses) / event_id (requests).
-
-    The source scan is pruned to the batch's event_id RANGE (req_event_id
-    <= event_id always — a request precedes its response), which parquet
-    row-group min/max stats turn into real IO pruning. Without it every
-    micro-batch re-reads the WHOLE source: replaying F files one per
-    trigger would cost O(F²) file reads."""
-    keyed = batch_df.withColumn(
-        "_aid",
-        F.when(F.col("inbound"), F.col("event_id")).otherwise(
-            F.col("req_event_id")
-        ),
-    ).withColumn("_rid", F.col("event_id"))
-    bounds = keyed.agg(
-        F.least(F.min("_aid"), F.min("_rid")).alias("lo"),
-        F.greatest(F.max("_aid"), F.max("_rid")).alias("hi"),
-    ).collect()[0]
-    src = spark.read.schema(RPC_EVENT_SCHEMA).parquet(source_dir)
-    if bounds.lo is not None:
-        src = src.where(F.col("event_id").between(bounds.lo, bounds.hi))
-    acts = src.select(F.col("event_id").alias("_aid"), F.col("actions").alias("_a"))
-    ress = src.select(F.col("event_id").alias("_rid"), F.col("results").alias("_r"))
-    return (
-        keyed.join(acts, "_aid", "left")
-        .join(ress, "_rid", "left")
-        .withColumn("actions", F.col("_a"))
-        .withColumn("results", F.col("_r"))
-        .drop("_aid", "_rid", "_a", "_r", "req_event_id")
-    )
-
-
 def _run_correlated_stream(
     spark, source_dir: str, sink_fn, checkpoint: str,
     max_files_per_trigger: int | None = None,
@@ -271,7 +226,6 @@ def _run_correlated_stream(
 def run_pipeline_available_now(
     spark, source_dir: str, sink_tables: dict[str, list],
     max_files_per_trigger: int | None = None,
-    rocksdb_state: bool = False,
 ) -> None:
     """File-replay mode: stream the rpc_events parquet directory through the
     stateful correlation + scanner machine, fan out per micro-batch into the
@@ -280,22 +234,11 @@ def run_pipeline_available_now(
     with the streaming engine (trigger=availableNow, graceful stop).
     ``max_files_per_trigger`` forces multi-micro-batch execution — tests use
     it to prove state survives batch boundaries."""
-    from ..operators.pipeline import finalize_and_route
-
-    if rocksdb_state:
-        # off-heap spillable state — the memory-pressure answer the
-        # reference solves by DROPPING state (B11); Spark spills instead
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
         # scanner enrichment already happened statefully upstream (cross-
         # batch correct); only finalization + routing remain per batch
-        for name, df in finalize_and_route(full).items():
+        for name, df in finalize_and_route(batch_df).items():
             sink_tables.setdefault(name, []).extend(df.collect())
 
     _run_correlated_stream(
@@ -322,11 +265,9 @@ def run_pipeline_to_parquet(
     hive partitions; a compaction job can fold old batch partitions
     without touching the stream.
     """
-    from ..operators.pipeline import finalize_and_route
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
-        for name, df in finalize_and_route(full).items():
+        for name, df in finalize_and_route(batch_df).items():
             df.write.mode("overwrite").parquet(
                 f"{out_dir}/{name}/batch_id={batch_id}"
             )
@@ -399,7 +340,6 @@ def run_pipeline_to_kafka(
     Pass ``checkpoint_dir`` to resume a specific run instead."""
     import hashlib
 
-    from ..operators.pipeline import finalize
     from .sink import parse_kafka_spec, to_kafka_records
 
     cfg = parse_kafka_spec(spec)
@@ -408,9 +348,9 @@ def run_pipeline_to_kafka(
         checkpoint_dir = f"{source_dir}/_kafka_checkpoint_{tag}"
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
         recs = to_kafka_records(
-            finalize(full), cfg["topic1"], cfg["topic2"], cfg["extra"], hostname
+            finalize(batch_df), cfg["topic1"], cfg["topic2"], cfg["extra"],
+            hostname,
         )
         if records_out is not None:
             records_out.extend(recs.collect())
@@ -600,26 +540,28 @@ def stream_range_join(
 
 
 def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.DataFrame:
-    """The pure per-batch correlation + scanner-machine step shared by the
-    applyInPandasWithState handler above and the transformWithState
-    processor below (single source of truth for the semantics)."""
+    """The pure per-batch correlation + scanner-machine step of the
+    applyInPandasWithState handler above. Rows keep their ``actions`` /
+    ``results`` arrays (Arrow hands them over as ndarrays of dicts; lists
+    of dicts go back out and into the JSON state): a pending multi request
+    holds its actions in state until its response inherits them, the same
+    merge batch ``correlate`` does, or the TTL expires the entry."""
     pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     out_rows = []
     for row in pdf.to_dict("records"):
-        row.pop("actions", None)
-        row.pop("results", None)
+        for c in ("actions", "results"):
+            if row[c] is not None:
+                row[c] = list(row[c])
         ts_ms = int(row["ts"].value // 1_000_000)
         for d in (pending, scanners):
             for k in [k for k, v in d.items()
                       if ts_ms - v["ts_ms"] > STATE_EXPIRATION_MS]:
                 del d[k]
         cid = str(row["call_id"])
-        row["req_event_id"] = None
         if row["inbound"]:
             pending[cid] = {
                 "ts_ms": ts_ms,
-                "event_id": int(row["event_id"]),
-                **{f: _scalar(row.get(f)) for f in _MERGE_FIELDS},
+                **{f: _scalar(row.get(f)) for f in _REQ_MERGE_COLS},
             }
             row["elapsed"] = None
         else:
@@ -628,11 +570,10 @@ def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.Data
                 row["method"] = "unknown"
                 row["elapsed"] = None
             else:
-                for f in _MERGE_FIELDS:
+                for f in _REQ_MERGE_COLS:
                     if _scalar(row.get(f)) is None:
                         row[f] = req[f]
                 row["elapsed"] = ts_ms - req["ts_ms"]
-                row["req_event_id"] = req["event_id"]
         sid = row.get("scanner")
         if sid is not None and not pd.isna(sid):
             sid, method = str(int(sid)), row.get("method")
@@ -657,85 +598,6 @@ def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.Data
                     scanners.pop(sid, None)
         out_rows.append(row)
     return pd.DataFrame(out_rows, columns=[f.name for f in CORRELATED_SCHEMA])
-
-
-def stream_correlate_tws(
-    events: DataFrame, *, watermark: str | None = None
-) -> DataFrame:
-    """Correlation on ``transformWithStateInPandas`` — the Spark 4 successor
-    of applyInPandasWithState (typed state handles, timer support, RocksDB
-    required). Same semantics as stream_correlate (both call
-    _correlate_rows); kept as a parallel implementation so the engine can
-    migrate when the older API is retired.
-
-    Idle-connection lifecycle: with a ``watermark`` (live-mode opt-in;
-    the default ``None`` keeps the replay-safe unbounded-state
-    behavior — see stream_correlate), runs in
-    eventTime timeMode and arms a per-key TIMER at latest packet + TTL —
-    re-armed on every batch with traffic, so it fires only once the
-    watermark passes an idle connection's latest packet + TTL, and
-    ``handleExpiredTimer`` then clears the state row (the timer analog
-    of the applyInPandasWithState path's EventTimeTimeout eviction;
-    reference trim-state, core.clj:285-296). ``watermark=None`` (the
-    default) is the unbounded-state replay behavior (timeMode "None").
-
-    Runtime requirements beyond stream_correlate: the RocksDB state store
-    AND the ``google.protobuf`` Python package (the TWS state-server
-    protocol uses it; absent in codec-free containers — the equivalence
-    test importorskips on it)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    use_timers = watermark is not None
-    if watermark is None and events.isStreaming:
-        _warn_unbounded_state("stream_correlate_tws")
-
-    class CorrelateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("correlate_state", "blob STRING")
-
-        def handleInputRows(self, key, rows, timerValues):
-            blob = self._state.get()
-            st = json.loads(blob[0]) if blob else {}
-            pending = st.get("pending", {})
-            scanners = st.get("scanners", {})
-            latest_ms = st.get("latest_ms", 0)
-            for pdf in rows:
-                if len(pdf):
-                    latest_ms = max(
-                        latest_ms, int(pdf["ts"].max().value // 1_000_000))
-                yield _correlate_rows(pending, scanners, pdf)
-            self._state.update(
-                (json.dumps({"pending": pending, "scanners": scanners,
-                             "latest_ms": latest_ms}),)
-            )
-            if use_timers:
-                # re-arm the single idle timer at latest + TTL (delete
-                # any stale one so exactly one timer rides per key)
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    latest_ms + STATE_EXPIRATION_MS)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # watermark passed latest + TTL with no new packets: the
-            # connection is dead — drop its state row entirely
-            self._state.clear()
-            return iter([])
-
-        def close(self) -> None:
-            pass
-
-    src = events.withWatermark("ts", watermark) if use_timers else events
-    return src.groupBy("client", "port").transformWithStateInPandas(
-        CorrelateProcessor(),
-        outputStructType=CORRELATED_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime" if use_timers else "None",
-    )
 
 
 SCD2_STREAM_SCHEMA = T.StructType([

@@ -110,30 +110,6 @@ def test_pcap_to_sql_end_to_end(spark, tmp_path):
     assert resp[2].elapsed == 800  # 1001.0 - 1000.2
 
 
-def test_pcap_datasource_format(spark, tmp_path):
-    """Spark 4 Python DataSource: spark.read.format('pcap') — one input
-    partition per capture file, same rows as the mapInPandas adapter."""
-    from hbase_packet_inspector_spark.sources import pcap_datasource
-
-    pcap_datasource.register(spark)
-    for i in range(3):
-        (tmp_path / f"c{i}.pcap").write_bytes(
-            P.build_pcap([(1000.0 + i, CLIENT, CPORT, SERVER, SPORT,
-                           bytes([65 + i]) * (i + 1))])
-        )
-    df = spark.read.format("pcap").load(str(tmp_path / "*.pcap"))
-    rows = sorted(df.collect(), key=lambda r: r.path)
-    assert [r.data for r in rows] == [b"A", b"BB", b"CCC"]
-    assert df.rdd.getNumPartitions() == 3  # one partition per file
-
-    # equivalence with the binaryFile adapter on the same glob (binaryFile
-    # reports file: URIs, the datasource raw paths)
-    alt = P.read_pcap(spark, str(tmp_path / "*.pcap"))
-    assert sorted(
-        (r.path.removeprefix("file:"), r.data) for r in alt.collect()
-    ) == [(r.path, r.data) for r in rows]
-
-
 def test_volume_reassembly_end_to_end(spark, tmp_path):
     """Thousands of packets over 50 interleaved connections with deterministic
     random fragmentation/coalescing: every framed message must come back,

@@ -181,8 +181,12 @@ def test_rocksdb_state_store(spark, tmp_path):
     fx.to_df(spark, fx.random_read()).write.parquet(src)
     sink: dict[str, list] = {}
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     try:
-        run_pipeline_available_now(spark, src, sink, rocksdb_state=True)
+        run_pipeline_available_now(spark, src, sink)
     finally:
         if prev:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
@@ -190,49 +194,6 @@ def test_rocksdb_state_store(spark, tmp_path):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     assert len(sink["requests"]) == 5 and len(sink["responses"]) == 5
     assert all(r.elapsed is not None for r in sink["responses"])
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path, workload):
-    """The transformWithStateInPandas implementation must produce exactly
-    the applyInPandasWithState outputs (both share _correlate_rows; this
-    pins the state plumbing). TWS requires the RocksDB state store and the
-    protobuf wheel (its state-server wire protocol)."""
-    pytest.importorskip("google.protobuf")
-    from hbase_packet_inspector_spark.streaming.pipeline import (
-        stream_correlate,
-        stream_correlate_tws,
-    )
-
-    src = str(tmp_path / "events")
-    fx.to_df(spark, workload).write.parquet(src)
-
-    def run(factory, ckpt):
-        events = spark.readStream.schema(fx.RPC_EVENT_SCHEMA).parquet(src)
-        out: list = []
-        q = (
-            factory(events)
-            .writeStream.foreachBatch(lambda df, _id: out.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(tuple(str(x) for x in r) for r in out)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        tws = run(stream_correlate_tws, "ck_tws")
-        base = run(stream_correlate, "ck_apply")
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert tws == base and len(tws) > 0
 
 
 def test_kafka_json_round_trip(spark):
@@ -261,37 +222,70 @@ def test_kafka_json_round_trip(spark):
 def test_streaming_kafka_json_consumer(spark, tmp_path):
     """Reference §3.3 consumer side, streamed: sink-payload JSON lines (what
     a fleet collector lands from the topics) -> readStream.text ->
-    from_kafka_records -> stateful correlation -> correlated responses.
-    Proves the whole live-mode composition runs under Structured Streaming
-    with the same operators as batch."""
+    from_kafka_records -> stateful correlation -> finalize_and_route per
+    micro-batch. The four tables must equal build_tables over the same
+    JSONL read in batch: the correlated stream carries whole records, so a
+    non-parquet source finalizes too, and a multi request's actions reach
+    its response across a micro-batch boundary through the state."""
+    import os
+
+    from hbase_packet_inspector_spark.operators.pipeline import (
+        finalize_and_route,
+    )
     from hbase_packet_inspector_spark.streaming.pipeline import stream_correlate
     from hbase_packet_inspector_spark.streaming.sink import (
         from_kafka_records,
         to_kafka_records,
     )
 
-    events = fx.to_df(spark, fx.random_read())
-    recs = to_kafka_records(events.drop("results"), "t1", "t2")
+    rows = []
+    for offset, gen in enumerate(
+            (fx.random_read, fx.sequential_write, fx.single_action_multi)):
+        for r in gen():
+            rows.append(dict(r, event_id=r["event_id"] + 1000 * offset,
+                             port=40000 + offset))
+    recs = to_kafka_records(fx.to_df(spark, rows), "t1", "t2").collect()
+    by_id = {json.loads(r.value)["event_id"]: r.value for r in recs}
+    # two files, one per micro-batch: the sequential_write multi request
+    # lands in the first and its response in the second
     src = tmp_path / "jsonl"
     src.mkdir()
-    (src / "dump.jsonl").write_text(
-        "\n".join(r.value for r in recs.collect()) + "\n"
-    )
+    for i, ids in enumerate((sorted(by_id)[:-3], sorted(by_id)[-3:])):
+        path = src / f"dump{i}.jsonl"
+        path.write_text("\n".join(by_id[e] for e in ids) + "\n")
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
 
-    stream = spark.readStream.text(str(src))
+    stream = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
     correlated = stream_correlate(from_kafka_records(stream))
     out: list = []
+    sink: dict[str, list] = {}
+
+    def _sink(df, _id):
+        out.extend(df.collect())
+        for name, t in finalize_and_route(df).items():
+            sink.setdefault(name, []).extend(t.collect())
+
     q = (
-        correlated.writeStream.foreachBatch(lambda df, _id: out.extend(df.collect()))
+        correlated.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 2
 
     responses = [r for r in out if not r.inbound]
-    assert len(responses) == 5
+    assert len(responses) == 7
     assert all(r.method == "multi" and r.elapsed is not None for r in responses)
+
+    batch = build_tables(from_kafka_records(spark.read.text(str(src))))
+
+    def key(rows):
+        return sorted(tuple(str(x) for x in r) for r in rows)
+
+    for name, df in batch.items():
+        assert key(sink.get(name, [])) == key(df.collect()), name
+    assert len(sink["actions"]) == 200 and len(sink["results"]) == 200
 
 
 def test_parquet_sink_exactly_once(spark, tmp_path, workload):
