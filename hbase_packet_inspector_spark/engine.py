@@ -32,7 +32,6 @@ from .schema import (
     RESULT_STRUCT,
     RPC_EVENT_SCHEMA,
     STATE_EXPIRATION_MS,
-    TCP_CHUNK_SCHEMA,
 )
 from .session import tune_session
 from .streaming.sink import parse_kafka_spec, to_kafka_records
@@ -152,16 +151,6 @@ class Engine:
             raise ValueError(f"unsupported decoder: {decode}")
         self._from_pcap = True
         return self
-
-    def load_tcp_chunks(self, source: str | DataFrame) -> DataFrame:
-        """Raw TCP payload chunks -> framed messages (reassembly operator).
-        Protobuf decode of the framed bytes is the pcap edge adapter's job."""
-        chunks = (
-            source
-            if isinstance(source, DataFrame)
-            else self.spark.read.schema(TCP_CHUNK_SCHEMA).parquet(source)
-        )
-        return reassemble(chunks)
 
     # -- file mode ------------------------------------------------------
 

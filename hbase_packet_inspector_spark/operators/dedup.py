@@ -30,6 +30,41 @@ DEFAULT_SHINGLE = 4
 DEFAULT_HASHES = 16
 DEFAULT_BANDS = 4
 
+# Byte cap for the near-dup joins' forced broadcasts (LSH band frame,
+# verification set frame, embedding vectors). Aggregated frames carry no
+# stats, so Catalyst cannot price these joins; left to AQE, the band join
+# turns broadcast only after shuffling both sides. Each pipeline entry
+# prices its frames against this one cap; past it, plain shuffle joins —
+# also the right plan at 10^9 docs.
+BROADCAST_BYTES = 128 << 20
+
+
+def _band_bytes(rows: int, n_hashes: int, n_bands: int) -> int:
+    """Estimated size of the band-keyed frame of ``rows`` docs: one
+    exploded row per (doc, band), each carrying all ``n_hashes`` 8-hex
+    signature pieces at ~16 B apiece in UnsafeRow form (offset/length
+    slot + aligned data)."""
+    return rows * n_bands * (n_hashes * 16 + 48)
+
+
+def _set_bytes(rows: int, sum_n: int) -> int:
+    """Estimated size of the shingle-set frame as verify_candidates
+    broadcasts it: TWICE (two keys, no exchange reuse), each copy ~16 B
+    per shingle plus ~64 B per row. Priced in bytes, not rows — a
+    row-count cap melts down exactly when documents grow."""
+    return 2 * (sum_n * 16 + rows * 64)
+
+
+def _sig_stats(sigs: DataFrame) -> tuple[int, int]:
+    """``(rows, sum(n))`` of a persisted signature frame: the one eager
+    job a near-dup pipeline spends on pricing. It also materializes the
+    persist that every later branch reads."""
+    st = sigs.agg(
+        F.count("*").alias("c"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("s"),
+    ).collect()[0]
+    return int(st.c), int(st.s)
+
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup: md5 group + per-doc duplicate flag (keep = min doc_id)."""
@@ -332,7 +367,6 @@ def minhash_wide(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
 
 def verify_candidates(candidates: DataFrame, sets: DataFrame,
                       min_jaccard: float,
-                      broadcast_bytes: int = 256 << 20,
                       stats: tuple[int, int] | None = None) -> DataFrame:
     """Exact Jaccard on candidate pairs only (the cheap post-LSH pass).
 
@@ -340,31 +374,13 @@ def verify_candidates(candidates: DataFrame, sets: DataFrame,
     (one row per doc, from shingle_sets()), not an explode-join — each pair
     costs one JVM set intersection instead of |shingles| join rows, which is
     what keeps verification linear in candidates on shingle-dense corpora.
-    The set frame is broadcast when small enough (aggregated frames have no
-    stats, so Catalyst can't make this call on its own); above the threshold
-    it falls back to shuffle joins on doc_id. The threshold is in estimated
-    BYTES, not rows — the frame carries the full shingle arrays, and this
-    join broadcasts it TWICE (two keys, no exchange reuse), so the estimate
-    prices both copies at UnsafeRow cost (~16 B/shingle: an 8-byte
-    offset/length slot plus 8-byte-aligned data); a row-count threshold
-    melts down exactly when the corpus grows.
 
-    ``stats`` — optional precomputed ``(n_rows, sum_n)`` of the set frame:
-    callers that already aggregate the signature frame (minhash_lsh_dedup
-    prices its band broadcast from the same cardinality) pass it so this
-    function submits NO eager pricing job of its own."""
-    try:
-        if stats is not None:
-            c, s = stats
-        else:
-            st = sets.agg(
-                F.count("*").alias("c"),
-                F.coalesce(F.sum("n"), F.lit(0)).alias("s"),
-            ).collect()[0]
-            c, s = st.c, st.s
-        small = 2 * (s * 16 + c * 64) <= broadcast_bytes
-    except Exception:
-        small = False
+    ``stats`` — the set frame's ``(n_rows, sum_n)``, as the caller's
+    ``_sig_stats`` returned it. When ``_set_bytes`` of it fits
+    ``BROADCAST_BYTES`` both set sides broadcast; without ``stats`` or
+    above the cap the plan joins by shuffling on doc_id. Never runs a
+    job."""
+    small = stats is not None and _set_bytes(*stats) <= BROADCAST_BYTES
     s1 = sets.select(F.col("doc_id").alias("d1"), F.col("sset").alias("set1"),
                      F.col("n").alias("n1"))
     s2 = sets.select(F.col("doc_id").alias("d2"), F.col("sset").alias("set2"),
@@ -418,8 +434,7 @@ def band_keyed(sigs: DataFrame, n_hashes: int = DEFAULT_HASHES,
 def lsh_candidates_wide(sigs: DataFrame, n_hashes: int = DEFAULT_HASHES,
                         n_bands: int = DEFAULT_BANDS,
                         min_est: float = 0.4,
-                        broadcast_bytes: int = 128 << 20,
-                        broadcast: bool | None = None) -> DataFrame:
+                        broadcast: bool = False) -> DataFrame:
     """Candidate pairs from wide signatures: per-band key self-joins, then a
     minhash-ESTIMATE prefilter (fraction of agreeing signatures) so only
     plausibly-similar pairs reach exact verification.
@@ -429,36 +444,17 @@ def lsh_candidates_wide(sigs: DataFrame, n_hashes: int = DEFAULT_HASHES,
     band collisions (critical on self-similar corpora where band buckets
     are crowded).
 
-    ``broadcast`` is a tri-state: ``None`` (default) prices the exploded
-    frame against ``broadcast_bytes`` by counting ``sigs`` — NOTE this
-    runs an eager Spark job at plan-CONSTRUCTION time (aggregated frames
-    carry no stats, so Catalyst cannot make this call; an adaptive
-    decision needs the cardinality now). ``True`` forces the broadcast
-    hint and ``False`` forces the shuffle join — both build the plan
-    without running ANY job, so plan-only tooling (explain audits,
-    dry-run composition) should pass an explicit value."""
+    ``broadcast=True`` hints the band-keyed side for a zero-shuffle
+    hash-broadcast join (minhash_lsh_dedup passes ``_band_bytes`` <=
+    ``BROADCAST_BYTES``); the default is the shuffle join on the band
+    key. Never runs a job."""
     keyed = band_keyed(sigs, n_hashes, n_bands)
     left = keyed.select(F.col("doc_id").alias("d1"), "bkey",
                         *[F.col(f"s{j}").alias(f"l{j}") for j in range(n_hashes)])
     right = keyed.select(F.col("doc_id").alias("d2"), "bkey",
                          *[F.col(f"s{j}").alias(f"r{j}") for j in range(n_hashes)])
-    # up to the byte cap the whole frame broadcasts and the band join goes
-    # hash-broadcast with zero shuffle (Catalyst can't infer this:
-    # aggregated frames carry no stats). The estimate prices the EXPLODED
-    # frame — one row per (doc, band), each carrying all n_hashes 8-hex
-    # signature pieces. Past the cap, a plain shuffle join on the band key
-    # — which is also the right plan at 10^9 docs.
-    if broadcast is True:
+    if broadcast:
         right = F.broadcast(right)
-    elif broadcast is None:
-        try:
-            # 16 B per 8-hex signature piece in UnsafeRow form (offset/
-            # length slot + aligned data), one exploded row per (doc, band)
-            row_bytes = n_bands * (n_hashes * 16 + 48)
-            if sigs.count() * row_bytes <= broadcast_bytes:
-                right = F.broadcast(right)
-        except Exception:
-            pass
     cand = left.join(right, ["bkey"]).where(F.col("d1") < F.col("d2"))
 
     est = sum(
@@ -487,20 +483,14 @@ def minhash_lsh_dedup(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
     # the exact verification — without it every branch would re-derive the
     # shingle/md5 arrays from the raw text
     sigs = minhash_wide(docs, n=n, n_hashes=n_hashes).persist()
-    # ONE eager job prices BOTH adaptive broadcasts (band frame + the two
-    # verify set sides) and materializes the persist — previously the
-    # pipeline paid two sequential driver jobs for the same scalars
-    # (sigs.count() inside lsh_candidates_wide, then the sets aggregate
-    # inside verify_candidates).
-    st = sigs.agg(
-        F.count("*").alias("c"),
-        F.coalesce(F.sum("n"), F.lit(0)).alias("s"),
-    ).collect()[0]
-    bc = int(st.c) * (n_bands * (n_hashes * 16 + 48)) <= (128 << 20)
+    # one eager job prices both broadcasts (band frame + the two verify
+    # set sides) and materializes the persist
+    stats = _sig_stats(sigs)
+    bc = _band_bytes(stats[0], n_hashes, n_bands) <= BROADCAST_BYTES
     cands = lsh_candidates_wide(sigs, n_hashes, n_bands, min_est,
                                 broadcast=bc)
     return verify_candidates(cands, sigs.select("doc_id", "sset", "n"),
-                             min_jaccard, stats=(int(st.c), int(st.s)))
+                             min_jaccard, stats=stats)
 
 
 def lsh_recall(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
@@ -569,7 +559,6 @@ def incremental_lsh_pairs(new_docs: DataFrame, corpus_docs: DataFrame, *,
                           n_bands: int = DEFAULT_BANDS,
                           min_est: float = 0.4,
                           min_jaccard: float = 0.35,
-                          broadcast_bytes: int = 128 << 20,
                           return_persisted: bool = False):
     """Incremental near-dup probe: verified MinHash pairs between an
     ARRIVING batch and the EXISTING corpus — the continuous-ingest shape
@@ -583,8 +572,8 @@ def incremental_lsh_pairs(new_docs: DataFrame, corpus_docs: DataFrame, *,
     ingest gate drops (or routes to keep-best) before appending the batch.
 
     100 TB shape: the batch side is small by construction, so its keyed
-    signatures and shingle sets BROADCAST (explicitly — aggregated frames
-    carry no stats for Catalyst to price) and the corpus side never
+    signatures and shingle sets BROADCAST (explicitly, while their
+    ``_band_bytes`` fits ``BROADCAST_BYTES``) and the corpus side never
     shuffles: band probe, estimate prefilter, and exact verification are
     all broadcast joins streamed over the corpus scan. In a deployed
     pipeline the corpus band index is a bucketed table written once
@@ -595,7 +584,8 @@ def incremental_lsh_pairs(new_docs: DataFrame, corpus_docs: DataFrame, *,
     the band probe, the estimate AND the verification); as with
     minhash_lsh_dedup, the caller owns that frame's lifetime — pass
     ``return_persisted=True`` to receive ``(pairs, signatures)`` and
-    unpersist the signature frame after materializing the result."""
+    unpersist the signature frame after materializing the result.
+    Construction runs one job: the batch's ``_sig_stats``."""
     # one corpus hashing pass feeds BOTH the band probe and the exact
     # verification (r12: previously each side re-derived the corpus
     # shingles from raw text) — same persist discipline as
@@ -603,24 +593,22 @@ def incremental_lsh_pairs(new_docs: DataFrame, corpus_docs: DataFrame, *,
     sigs_old = minhash_wide(corpus_docs, n=n, n_hashes=n_hashes).persist()
     keyed_old = band_keyed(sigs_old, n_hashes, n_bands)
     sets_old = sigs_old.select("doc_id", "sset", "n")
-    return _with_persist_handle(
-        _probe_lsh(keyed_old, sets_old, new_docs, n=n, n_hashes=n_hashes,
-                   n_bands=n_bands, min_est=min_est,
-                   min_jaccard=min_jaccard,
-                   broadcast_bytes=broadcast_bytes),
-        return_persisted=return_persisted,
-    )
+    out, sigs_new = _probe_lsh(keyed_old, sets_old, new_docs, n=n,
+                               n_hashes=n_hashes, n_bands=n_bands,
+                               min_est=min_est, min_jaccard=min_jaccard)
+    return (out, sigs_new) if return_persisted else out
 
 
 def _probe_lsh(keyed_old: DataFrame, sets_old: DataFrame,
                new_docs: DataFrame, *, n: int, n_hashes: int, n_bands: int,
-               min_est: float, min_jaccard: float,
-               broadcast_bytes: int) -> DataFrame:
+               min_est: float, min_jaccard: float) -> DataFrame:
     """Shared probe core: batch docs vs a corpus given as its band-keyed
     signature frame (doc_id, bkey, s0..s{n-1}) + shingle-set frame
     (doc_id, sset, n) — either derived on the fly (incremental_lsh_pairs)
     or read back from the persisted bucketed index (probe_lsh_index)."""
     sigs_new = minhash_wide(new_docs, n=n, n_hashes=n_hashes).persist()
+    rows, _ = _sig_stats(sigs_new)
+    small = _band_bytes(rows, n_hashes, n_bands) <= BROADCAST_BYTES
 
     keyed_new = band_keyed(sigs_new, n_hashes, n_bands).select(
         F.col("doc_id").alias("d_new"), "bkey",
@@ -630,11 +618,6 @@ def _probe_lsh(keyed_old: DataFrame, sets_old: DataFrame,
         F.col("doc_id").alias("d_old"), "bkey",
         *[F.col(f"s{j}").alias(f"r{j}") for j in range(n_hashes)],
     )
-    try:
-        row_bytes = n_bands * (n_hashes * 16 + 48)
-        small = sigs_new.count() * row_bytes <= broadcast_bytes
-    except Exception:
-        small = False
     if small:
         keyed_new = F.broadcast(keyed_new)
     est = sum(
@@ -670,22 +653,6 @@ def _probe_lsh(keyed_old: DataFrame, sets_old: DataFrame,
         .select("d_new", "d_old", "jaccard")
     )
     return out, sigs_new
-
-
-def _with_persist_handle(result, *, return_persisted: bool):
-    """Public-wrapper tail for the probe: long-lived callers (the
-    streaming ingest gate runs one probe per micro-batch, forever) need
-    to release the batch-signature persist without clearCache'ing the
-    whole session. ``return_persisted=True`` hands back ``(pairs,
-    signatures)`` explicitly — the structural contract; the legacy
-    ``pairs._hpi_persisted`` attribute is still attached for one release,
-    but any wrapper transformation drops it silently, so prefer the
-    tuple."""
-    out, sigs = result
-    if return_persisted:
-        return out, sigs
-    out._hpi_persisted = sigs
-    return out
 
 
 def save_lsh_index(docs: DataFrame, path: str, *, table: str = "lsh_index",
@@ -817,7 +784,6 @@ def probe_lsh_index(bands: DataFrame, sets: DataFrame, batch_docs: DataFrame,
                     n_hashes: int = DEFAULT_HASHES,
                     n_bands: int = DEFAULT_BANDS,
                     min_est: float = 0.4, min_jaccard: float = 0.35,
-                    broadcast_bytes: int = 128 << 20,
                     return_persisted: bool = False):
     """Probe an arriving batch against a PERSISTED corpus index (from
     save_lsh_index / load_lsh_index): identical contract and output to
@@ -826,14 +792,12 @@ def probe_lsh_index(bands: DataFrame, sets: DataFrame, batch_docs: DataFrame,
     batch-sized frames plus bucket-pruned index reads. This is the body a
     streaming ingest gate runs per micro-batch under foreachBatch; such
     long-lived callers pass ``return_persisted=True`` and unpersist the
-    returned signature frame each batch."""
-    return _with_persist_handle(
-        _probe_lsh(bands, sets, batch_docs, n=n, n_hashes=n_hashes,
-                   n_bands=n_bands, min_est=min_est,
-                   min_jaccard=min_jaccard,
-                   broadcast_bytes=broadcast_bytes),
-        return_persisted=return_persisted,
-    )
+    returned signature frame each batch. Construction runs one job: the
+    batch's ``_sig_stats``."""
+    out, sigs_new = _probe_lsh(bands, sets, batch_docs, n=n,
+                               n_hashes=n_hashes, n_bands=n_bands,
+                               min_est=min_est, min_jaccard=min_jaccard)
+    return (out, sigs_new) if return_persisted else out
 
 
 def lsh_bucket_profile(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
@@ -933,8 +897,8 @@ def simhash_pairs(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
     # one — its exchange is reused — plus the two verification joins);
     # unpersisted, the vote aggregate re-runs per scan and dominates the
     # query (measured ~3x at sf0.1). Narrow frame: doc_id + a bits-char
-    # string. Caller releases via clearCache / the returned plan's
-    # _hpi_persisted handle (the probe-lsh convention).
+    # string. Caller releases via clearCache or return_persisted=True
+    # (the probe-lsh convention).
     sigs = simhash(docs, n=n, bits=bits).persist()
     keyed = sigs.select(
         "doc_id",
@@ -976,8 +940,7 @@ def simhash_pairs(docs: DataFrame, *, n: int = DEFAULT_SHINGLE,
         .where(F.col("hamming") <= max_hamming)
         .select("d1", "d2", "hamming")
     )
-    return _with_persist_handle((out, sigs),
-                                return_persisted=return_persisted)
+    return (out, sigs) if return_persisted else out
 
 
 def dedup_clusters(pairs: DataFrame, iterations: int = 4) -> DataFrame:

@@ -451,10 +451,8 @@ def ahash_pairs(media: DataFrame, *, grid: int = 4, n_bands: int = 4,
     Scale shape: the decode runs ONCE into a persisted (media_id, int)
     frame (three consumers: band explode + both verify joins — long-lived
     callers pass ``return_persisted=True`` for ``(pairs, sigs)`` and
-    unpersist explicitly; the legacy ``_hpi_persisted`` attribute remains
-    one release); the
-    band join shuffles (id, nibble) rows only; payload bytes never
-    reach any shuffle. Output: (d1, d2, hamming)."""
+    unpersist explicitly); the band join shuffles (id, nibble) rows only;
+    payload bytes never reach any shuffle. Output: (d1, d2, hamming)."""
     sigs = ahash_ppm(media, grid).persist()
     keyed = ahash_band_keyed(sigs, grid=grid, n_bands=n_bands).select(
         "media_id", "bkey"
@@ -475,10 +473,7 @@ def ahash_pairs(media: DataFrame, *, grid: int = 4, n_bands: int = 4,
         .where(F.col("hamming") <= max_hamming)
         .select("d1", "d2", "hamming")
     )
-    from .dedup import _with_persist_handle
-
-    return _with_persist_handle((out, sigs),
-                                return_persisted=return_persisted)
+    return (out, sigs) if return_persisted else out
 
 
 def incremental_ahash_pairs(new_media: DataFrame,
@@ -490,8 +485,6 @@ def incremental_ahash_pairs(new_media: DataFrame,
     loop (which reads the bucketed index instead of re-hashing the
     corpus). Pairs only ACROSS the two sides, never within. Output:
     (d_new, d_old, hamming)."""
-    from .dedup import _with_persist_handle
-
     sigs_new = ahash_ppm(new_media, grid).persist()
     keyed_old = ahash_band_keyed(ahash_ppm(corpus_media, grid),
                                  grid=grid, n_bands=n_bands)
@@ -518,8 +511,7 @@ def incremental_ahash_pairs(new_media: DataFrame,
         .where(F.col("hamming") <= max_hamming)
         .select("d_new", "d_old", "hamming")
     )
-    return _with_persist_handle((out, sigs_new),
-                                return_persisted=return_persisted)
+    return (out, sigs_new) if return_persisted else out
 
 
 def media_gate_decisions(new_media: DataFrame,
@@ -581,8 +573,6 @@ def probe_ahash_index(index: DataFrame, new_media: DataFrame, *,
     hashes already in the index rows. Output: (d_new, d_old, hamming).
     Long-lived callers (a streaming gate) pass ``return_persisted=True``
     and unpersist the batch-signature frame per micro-batch."""
-    from .dedup import _with_persist_handle
-
     sigs_new = ahash_ppm(new_media, grid).persist()
     keyed_new = ahash_band_keyed(sigs_new, grid=grid, n_bands=n_bands)
     cand = (
@@ -608,8 +598,7 @@ def probe_ahash_index(index: DataFrame, new_media: DataFrame, *,
         .where(F.col("hamming") <= max_hamming)
         .select("d_new", "d_old", "hamming")
     )
-    return _with_persist_handle((out, sigs_new),
-                                return_persisted=return_persisted)
+    return (out, sigs_new) if return_persisted else out
 
 
 def append_ahash_index(new_media: DataFrame, *,

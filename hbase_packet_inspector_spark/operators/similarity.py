@@ -25,7 +25,7 @@ from pyspark.sql import Window
 # byte-small embeddings scan plans ONE partition and every broadcast-join
 # scoring stage downstream — O(#base x #queries x dim) dot products —
 # runs on a single core (guide §2.5 input skew).
-from .dedup import _spread  # noqa: E402
+from .dedup import BROADCAST_BYTES, _spread  # noqa: E402
 
 
 def _as_double(arr: Column) -> Column:
@@ -341,17 +341,18 @@ def embedding_neardup(emb: DataFrame, *, bits: int = 16, n_bands: int = 4,
     # probe — building this frame and then not executing it must launch
     # nothing. Parquet float arrays compress ~1:1 and UnsafeRow adds
     # per-row overhead (and the vector frame broadcasts TWICE), so the
-    # stat gets 4x headroom; the exploded band frame (n_bands short keys
-    # per vector) is bounded by the same budget. Unknown stats (no file
-    # source under the plan) => conservative shuffle path, the plan
-    # that's also correct at 10^9 vectors.
+    # stat gets 4x headroom against dedup's BROADCAST_BYTES; the exploded
+    # band frame (n_bands short keys per vector) is bounded by the same
+    # budget. Unknown stats (no file source under the plan) =>
+    # conservative shuffle path, the plan that's also correct at 10^9
+    # vectors.
     try:
         size_b = int(
             emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         size_b = 1 << 62
-    vec_small = band_small = 4 * size_b <= (128 << 20)
+    vec_small = band_small = 4 * size_b <= BROADCAST_BYTES
 
     left = keyed.select(F.col(id_col).alias("d1"), "bkey")
     right = keyed.select(F.col(id_col).alias("d2"), "bkey")

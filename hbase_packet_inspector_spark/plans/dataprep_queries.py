@@ -6061,7 +6061,9 @@ def _overlap(*thunks):
     bench/UI labels survive. On PySpark 4.x the ACTIVE SESSION must be
     passed (``inheritable_thread_target(session)(fn)``) — the bare-
     function form warns 'Spark session is not provided' and silently
-    drops tag/label inheritance (r12 ADVICE)."""
+    drops tag/label inheritance (r12 ADVICE). With pinned threads off,
+    that session form returns the session itself, not a wrapper; the
+    thunks then run unwrapped, as the bare-function form would."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -6073,7 +6075,8 @@ def _overlap(*thunks):
     wrap = (inheritable_thread_target(sess) if sess is not None
             else inheritable_thread_target)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(wrap(t)) for t in thunks]
+        futs = [pool.submit(wrap(t) if callable(wrap) else t)
+                for t in thunks]
         return tuple(f.result() for f in futs)
 
 
@@ -10409,8 +10412,10 @@ def _fuzzy_edit_pairs(docs: DataFrame, *, max_dist: int = 6) -> DataFrame:
     the first-char-typo recall pin can drive it with crafted rows.
     Pass P blocks on the 2-char prefix of the 24-char window, pass S on
     its 4-char suffix (each x length-quartile; the longer suffix key is
-    a measured selectivity choice — see the registered query's doc);
-    candidate pairs are deduped before ONE levenshtein evaluation."""
+    a measured selectivity choice — see the registered query's doc).
+    Every candidate pair pays the banded levenshtein, a pair caught by
+    both passes twice; the distinct runs after the distance filter, on
+    the surviving pairs only."""
     d = docs.filter(F.length("text") >= 8).select(
         "doc_id", F.substring("text", 1, 24).alias("pre"))
     b = d.select(

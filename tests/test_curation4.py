@@ -263,11 +263,11 @@ def test_bpe_more_rounds_than_merges(spark):
     assert len(out) == 1 and out[0].n_words == 3 and out[0].n_bpe_tokens == 3
 
 
-def test_lsh_candidates_broadcast_tristate(spark):
-    """broadcast=True/False build the candidate plan WITHOUT running any
-    Spark job (plan-only tooling must never trigger one); the default
-    None prices the broadcast with an eager sigs.count(). All three
-    produce the same pairs."""
+def test_lsh_candidates_broadcast_hint_job_free(spark):
+    """Every form — the default shuffle join, broadcast=False and
+    broadcast=True — builds the candidate plan WITHOUT running any Spark
+    job (pricing belongs to the pipeline entry, never to this building
+    block), and all three produce the same pairs."""
     docs = _docs(spark, [
         (0, "alpha beta gamma delta epsilon zeta eta theta", "en", "s", 40),
         (1, "alpha beta gamma delta epsilon zeta eta theta x", "en", "s", 40),
@@ -278,6 +278,7 @@ def test_lsh_candidates_broadcast_tristate(spark):
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup())
+    plan_default = D.lsh_candidates_wide(sigs)
     plan_off = D.lsh_candidates_wide(sigs, broadcast=False)
     plan_on = D.lsh_candidates_wide(sigs, broadcast=True)
     assert set(tracker.getJobIdsForGroup()) == before  # zero jobs run
@@ -285,18 +286,20 @@ def test_lsh_candidates_broadcast_tristate(spark):
     # the band-keyed side
     assert "broadcast" in plan_on._jdf.queryExecution().optimizedPlan() \
         .toString().lower()
+    assert "broadcast" not in plan_default._jdf.queryExecution() \
+        .optimizedPlan().toString().lower()
 
-    auto = {(r.d1, r.d2) for r in D.lsh_candidates_wide(sigs).collect()}
+    auto = {(r.d1, r.d2) for r in plan_default.collect()}
     assert {(r.d1, r.d2) for r in plan_off.collect()} == auto
     assert {(r.d1, r.d2) for r in plan_on.collect()} == auto
     assert (0, 1) in auto and (0, 2) not in auto
 
 
 def test_verify_candidates_precomputed_stats_job_free(spark):
-    """stats=(n_rows, sum_n) builds the verification plan WITHOUT the
-    eager pricing aggregate (r13: minhash_lsh_dedup prices both adaptive
-    broadcasts from ONE job and hands the scalars down) and emits the
-    identical verified pairs as the self-pricing path."""
+    """verify_candidates never runs a job: with stats=(n_rows, sum_n)
+    (minhash_lsh_dedup prices both broadcasts from ONE aggregate and
+    hands the scalars down) it builds the broadcast plan, without stats
+    the shuffle plan — and both emit the identical verified pairs."""
     docs = _docs(spark, [
         (0, "alpha beta gamma delta epsilon zeta eta theta", "en", "s", 40),
         (1, "alpha beta gamma delta epsilon zeta eta theta x", "en", "s", 40),
@@ -314,8 +317,37 @@ def test_verify_candidates_precomputed_stats_job_free(spark):
     before = set(tracker.getJobIdsForGroup())
     plan = D.verify_candidates(cands, sets, 0.35,
                                stats=(int(st[0]), int(st[1])))
+    plan_shuffle = D.verify_candidates(cands, sets, 0.35)
     assert set(tracker.getJobIdsForGroup()) == before  # zero jobs run
     got = {(r.d1, r.d2, round(r.jaccard, 6)) for r in plan.collect()}
     want = {(r.d1, r.d2, round(r.jaccard, 6))
-            for r in D.verify_candidates(cands, sets, 0.35).collect()}
+            for r in plan_shuffle.collect()}
     assert got == want and any(p[:2] == (0, 1) for p in got)
+
+
+def _sql_executions(spark, build):
+    """Number of SQL executions (one per action, however many AQE stage
+    jobs it spans) that ``build()`` submits."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    build()
+    bus.waitUntilEmpty()
+    return store.executionsCount() - before
+
+
+def test_lsh_pipelines_price_with_one_job(spark):
+    """minhash_lsh_dedup and incremental_lsh_pairs each spend exactly ONE
+    action at construction — the (count, sum(n)) aggregate that prices
+    their broadcasts and materializes the signature persist."""
+    docs = _docs(spark, [
+        (0, "alpha beta gamma delta epsilon zeta eta theta", "en", "s", 40),
+        (1, "alpha beta gamma delta epsilon zeta eta theta x", "en", "s", 40),
+        (2, "totally different words live over here now ok", "en", "s", 40),
+    ])
+    assert _sql_executions(spark, lambda: D.minhash_lsh_dedup(docs)) == 1
+    batch, corpus = docs.where("doc_id = 1"), docs.where("doc_id != 1")
+    assert _sql_executions(
+        spark, lambda: D.incremental_lsh_pairs(batch, corpus)) == 1
+    spark.catalog.clearCache()

@@ -423,8 +423,7 @@ def test_compact_lsh_index_folds_files_and_preserves_probe(spark, tmp_path):
 
 def test_probe_lsh_explicit_persist_handle(spark):
     """return_persisted=True hands back (pairs, signatures) structurally —
-    the lifetime contract the streaming gate relies on; the legacy
-    attribute stays attached for one release when not requested."""
+    the lifetime contract the streaming gate relies on."""
     corpus = _docs(spark, [(0, _BASE), (1, _OTHER)])
     batch = _docs(spark, [(10, _NEAR)])
     pairs, sigs = D.incremental_lsh_pairs(
@@ -434,10 +433,6 @@ def test_probe_lsh_explicit_persist_handle(spark):
     assert sigs.storageLevel.useMemory  # pinned for the probe's three scans
     sigs.unpersist()
     assert not sigs.storageLevel.useMemory
-    legacy = D.incremental_lsh_pairs(batch, corpus,
-                                     min_est=0.3, min_jaccard=0.3)
-    assert legacy._hpi_persisted is not None
-    legacy._hpi_persisted.unpersist()
 
 
 def test_compact_lsh_index_derives_bucket_spec(spark, tmp_path):

@@ -851,3 +851,19 @@ def test_overlap_materializes_concurrently_and_preserves_order(spark):
 
     with pytest.raises(ValueError, match="boom"):
         _overlap(lambda: spark.range(1).localCheckpoint(), boom)
+
+
+def test_overlap_runs_unwrapped_without_pinned_threads(spark, monkeypatch):
+    """With pinned threads off, pyspark's inheritable_thread_target hands
+    back its argument unchanged — for the session form that is the
+    session itself, which is not callable. _overlap must then run the
+    thunks unwrapped instead of raising."""
+    import pyspark
+
+    from hbase_packet_inspector_spark.plans.dataprep_queries import _overlap
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target",
+                        lambda f=None: f)
+    a, b = _overlap(lambda: spark.range(4).count(),
+                    lambda: spark.range(2).count())
+    assert (a, b) == (4, 2)
