@@ -132,21 +132,24 @@ class Engine:
         ``decode='hbase'`` (default) runs the real HBase RPC protobuf
         decoder (``sources.hbase_decode`` — pure-Python wire format, no
         google.protobuf), validated against the reference's own pcap
-        fixtures; ``decode='json'`` parses framed payloads as JSON event
-        bodies (the synthetic-capture seam; see MESSAGE_BODY_SCHEMA).
+        fixtures. Framing and decode run in one grouped Python pass keyed
+        ``(client, port)`` (``decode_hbase_chunks``), so the derivation
+        has one shuffle before correlation. ``decode='json'`` parses framed
+        payloads as JSON event bodies (the synthetic-capture seam; see
+        MESSAGE_BODY_SCHEMA) after ``reassemble``, its one shuffle on the
+        same key.
 
         The events stay lazy here; ``register_tables`` derives the capture
         once for all four tables."""
         from .sources import pcap as P
 
-        packets = P.read_pcap(self.spark, path)
-        messages = reassemble(P.packets_to_chunks(packets, ports))
+        chunks = P.packets_to_chunks(P.read_pcap(self.spark, path), ports)
         if decode == "hbase":
-            from .sources.hbase_decode import decode_hbase_frames
+            from .sources.hbase_decode import decode_hbase_chunks
 
-            self._events = decode_hbase_frames(messages)
+            self._events = decode_hbase_chunks(chunks)
         elif decode == "json":
-            self._events = decode_json_messages(messages)
+            self._events = decode_json_messages(reassemble(chunks))
         else:
             raise ValueError(f"unsupported decoder: {decode}")
         self._from_pcap = True
@@ -184,8 +187,8 @@ class Engine:
         After ``load_pcap`` the capture is derived once per call: the
         finalized frame (the last frame the four tables share) is
         local-checkpointed lazily. AQE runs its shuffle-map stages (pcap
-        scan, reassembly, decode, correlation) while this call plans it,
-        the first table action computes the last stage into the
+        scan, the framing + decode pass, correlation) while this call
+        plans it, the first table action computes the last stage into the
         checkpoint, and every table reads its blocks from then on. A local
         checkpoint, unlike ``cache()``, is not matched by plan, so a later
         load of the same (rotated) path never reads these blocks, and the

@@ -972,11 +972,12 @@ def host_pagerank(edges: DataFrame, *, src_col: str = "src_host",
         # ranks and every delta would read 0.0 — a caller probing
         # convergence would see "converged" from a run that never ran
         raise ValueError("return_delta requires iters >= 1")
-    # NULL weights coalesce to 0.0 at ingest (r12 ADVICE): sum() skips
-    # nulls, so an all-null-weight node's ow would read NULL and the
-    # merged setup probe below would count it dangling where the old
-    # anti-join counted it non-dangling. With the coalesce ow is always
-    # defined and the probe is exactly the anti-join's answer.
+    # NULL weights coalesce to 0.0 at ingest, so ow is always defined. A
+    # host whose out-weight is 0 (all-zero or all-NULL weights) has no
+    # out-link to split its rank over: it counts as dangling (ow > 0
+    # below), so its rank teleports, and its edges are left out of the
+    # contribution sum, where rank * w / 0 would raise DIVIDE_BY_ZERO
+    # under ANSI (or read NULL and leak its mass without ANSI).
     w = (F.coalesce(F.col(weight_col).cast("double"), F.lit(0.0))
          if weight_col else F.lit(1.0))
     # e is read twice during setup (ow aggregate + the e2 join) and each
@@ -1005,11 +1006,12 @@ def host_pagerank(edges: DataFrame, *, src_col: str = "src_host",
     # an out-link — come from ONE aggregate job over the cached frames
     # (merged in r12: the former nodes.count() + anti-join isEmpty pair
     # cost two sequential setup jobs; ow is grouped by src so the left
-    # join matches each node at most once and count(ow) counts exactly
-    # the nodes WITH out-links).
+    # join matches each node at most once and the ow > 0 count counts
+    # exactly the nodes WITH out-links).
     _setup = (
         nodes.join(ow.withColumnRenamed("src", "host"), "host", "left")
-        .agg(F.count(F.lit(1)).alias("n"), F.count("ow").alias("n_out"))
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.count(F.when(F.col("ow") > 0, 1)).alias("n_out"))
         .first()
     )
     n = int(_setup["n"])  # the one driver scalar: node count for 1/N terms
@@ -1022,7 +1024,7 @@ def host_pagerank(edges: DataFrame, *, src_col: str = "src_host",
             "host", F.lit(0.0).alias("pagerank"),
             F.lit(0).cast("bigint").alias("out_links"),
         )
-    out_hosts = ow.select(F.col("src").alias("host"))
+    out_hosts = ow.where(F.col("ow") > 0).select(F.col("src").alias("host"))
     # Price the dangling term ONCE: when the graph has no dangling host
     # (every node has an out-link — typical of host link graphs, where a
     # node only appears by linking or being linked by a linker), dm is
@@ -1050,7 +1052,8 @@ def host_pagerank(edges: DataFrame, *, src_col: str = "src_host",
     for _ in range(iters):
         prev = ranks
         contrib = (
-            e2.join(ranks.withColumnRenamed("host", "src"), "src")
+            e2.where(F.col("ow") > 0)
+            .join(ranks.withColumnRenamed("host", "src"), "src")
             .groupBy(F.col("dst").alias("host"))
             .agg(F.sum(F.col("rank") * F.col("w") / F.col("ow"))
                  .alias("contrib"))

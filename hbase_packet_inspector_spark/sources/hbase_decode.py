@@ -13,8 +13,18 @@ sessions, request-attribute merges) is NOT computed here — the downstream
 correlate()/scanner_enrich()/finalize() operators own those semantics; this
 pass extracts exactly what the bytes say plus the method dispatch.
 
-At 100 TB: one shuffle on (client, port); each group is one connection's
-frames. Malformed frames behave like the reference's catch block
+Two entry points share that group function:
+
+- ``decode_hbase_chunks`` (what ``Engine.load_pcap`` runs): TCP chunks in,
+  one shuffle on (client, port); each group frames its connection
+  (``operators.reassembly._reassemble_group``) and decodes the frames in
+  the same Python pass, like the reference's one loop per connection
+  (``process-hbase-packet``, core.clj:192-259).
+- ``decode_hbase_frames``: already framed messages in, one shuffle on
+  (client, port) of its own — after ``reassemble`` that is two grouped
+  stages and two shuffles.
+
+Malformed frames behave like the reference's catch block
 (core.clj:255-259): the frame is dropped, the connection's decode state
 survives only through what was already consumed.
 """
@@ -25,6 +35,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from ..operators.reassembly import _reassemble_group
 from ..schema import ACTION_STRUCT, RESULT_STRUCT, RPC_EVENT_SCHEMA
 from . import hbase_wire as W
 
@@ -82,4 +93,19 @@ def decode_hbase_frames(messages: DataFrame) -> DataFrame:
     return (
         messages.groupBy("client", "port")
         .applyInPandas(_decode_group, RPC_EVENT_SCHEMA)
+    )
+
+
+def _frame_and_decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    return _decode_group(_reassemble_group(pdf))
+
+
+def decode_hbase_chunks(chunks: DataFrame) -> DataFrame:
+    """TCP chunks (schema.TCP_CHUNK_SCHEMA) -> RPC_EVENT_SCHEMA rows:
+    framing and decode of each connection in one grouped pass; the same
+    rows as ``decode_hbase_frames(reassemble(chunks))`` with one shuffle
+    fewer."""
+    return (
+        chunks.groupBy("client", "port")
+        .applyInPandas(_frame_and_decode_group, RPC_EVENT_SCHEMA)
     )

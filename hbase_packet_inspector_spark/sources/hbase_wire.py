@@ -53,6 +53,9 @@ def fields(buf: bytes) -> dict[int, list]:
     """Parse one message's wire fields: {field_no: [value, ...]} in order.
     Varint/fixed fields yield ints, length-delimited fields yield bytes.
     Groups (wire types 3/4) don't occur in these protos -> WireError."""
+    if not isinstance(buf, bytes):
+        # a varint where a sub-message belongs (see _first)
+        raise WireError("expected a length-delimited message")
     out: dict[int, list] = {}
     pos = 0
     n = len(buf)
@@ -93,9 +96,16 @@ def delimited(buf: bytes, pos: int) -> tuple[bytes, int]:
     return buf[pos:pos + ln], pos + ln
 
 
-def _first(d: dict[int, list], fno: int):
+def _first(d: dict[int, list], fno: int, kind: type = int):
+    """Field ``fno``'s first value, or None. A value of the other wire kind
+    (a varint where bytes belong, or bytes where a number belongs) is
+    invalid framing, not a value to pass on."""
     v = d.get(fno)
-    return v[0] if v else None
+    if not v:
+        return None
+    if not isinstance(v[0], kind):
+        raise WireError(f"field {fno}: expected {kind.__name__}")
+    return v[0]
 
 
 def _varints(values: list) -> list[int]:
@@ -116,10 +126,10 @@ def _varints(values: list) -> list[int]:
 def _region(d: dict[int, list], fno: int = 1) -> dict:
     """RegionSpecifier (HBase.proto: 1 type, 2 value) -> {table, region}
     via the reference's region-name decode (hbase.clj:101-108)."""
-    spec = _first(d, fno)
+    spec = _first(d, fno, bytes)
     if spec is None:
         return {}
-    value = _first(fields(spec), 2)
+    value = _first(fields(spec), 2, bytes)
     if value is None:
         return {}
     parsed = _parse_region_name_py(bytes(value))
@@ -134,10 +144,10 @@ def parse_get_request(buf: bytes) -> dict:
     (hbase.clj:110-120)."""
     d = fields(buf)
     out = _region(d)
-    get = _first(d, 2)
+    get = _first(d, 2, bytes)
     if get is not None:
         g = fields(get)
-        row = _first(g, 1)
+        row = _first(g, 1, bytes)
         if row is not None:
             out["row"] = _to_string_binary_py(bytes(row))
         out["cells"] = sum(
@@ -163,12 +173,12 @@ def parse_scan_request(buf: bytes) -> dict:
     out = {"method": method, "scanner": _first(d, 3)}
     if method in ("open-scanner", "small-scan"):
         out.update(_region(d))
-        scan = _first(d, 2)
+        scan = _first(d, 2, bytes)
         if scan is not None:
             s = fields(scan)
             out["caching"] = _first(s, 17)
-            row = _first(s, 3)
-            stop = _first(s, 4)
+            row = _first(s, 3, bytes)
+            stop = _first(s, 4, bytes)
             out["row"] = _to_string_binary_py(bytes(row)) if row is not None else None
             out["stoprow"] = (
                 _to_string_binary_py(bytes(stop)) if stop is not None else None
@@ -183,7 +193,7 @@ def _parse_mutation(buf: bytes, condition: bool) -> dict:
     carries a condition (hbase.clj:171-186)."""
     d = fields(buf)
     mtype = _MUTATION_TYPES.get(_first(d, 2) or 0, "put")
-    row = _first(d, 1)
+    row = _first(d, 1, bytes)
     qv_count = sum(len(fields(cv).get(2, [])) for cv in d.get(3, []))
     return {
         "method": f"check-and-{mtype}" if condition else mtype,
@@ -196,7 +206,7 @@ def _parse_mutation(buf: bytes, condition: bool) -> dict:
 def parse_mutate_request(buf: bytes) -> dict:
     """MutateRequest(1 region, 2 mutation, 3 condition) (hbase.clj:188-194)."""
     d = fields(buf)
-    mutation = _first(d, 2)
+    mutation = _first(d, 2, bytes)
     out = _parse_mutation(mutation, 3 in d) if mutation is not None else {}
     out.update(_region(d))
     return out
@@ -214,12 +224,12 @@ def parse_multi_request(buf: bytes) -> dict:
         region = _region(r)
         for act in r.get(3, []):
             a = fields(act)
-            mutation = _first(a, 2)
-            get = _first(a, 3)
+            mutation = _first(a, 2, bytes)
+            get = _first(a, 3, bytes)
             if mutation is not None:
                 entry = _parse_mutation(mutation, condition)
             elif get is not None:
-                row = _first(fields(get), 1)
+                row = _first(fields(get), 1, bytes)
                 entry = {
                     "method": "get",
                     "row": _to_string_binary_py(bytes(row))
@@ -260,7 +270,7 @@ def parse_scan_response(buf: bytes) -> dict:
 def parse_get_response(buf: bytes) -> dict:
     """GetResponse(1 result) (hbase.clj:43-47)."""
     d = fields(buf)
-    result = _first(d, 1)
+    result = _first(d, 1, bytes)
     return {"cells": _result_cells(result) if result is not None else 0}
 
 
@@ -274,11 +284,11 @@ def parse_multi_response(buf: bytes) -> dict:
     for rar in d.get(1, []):
         for roe in fields(rar).get(1, []):
             e = fields(roe)
-            result = _first(e, 2)
-            exc = _first(e, 3)
+            result = _first(e, 2, bytes)
+            exc = _first(e, 3, bytes)
             error = None
             if exc is not None:
-                name = _first(fields(exc), 1)
+                name = _first(fields(exc), 1, bytes)
                 error = name.decode("utf-8", "replace") if name is not None else None
             results.append({
                 "cells": _result_cells(result) if result is not None else None,
@@ -297,7 +307,7 @@ def parse_request_frame(data: bytes) -> dict | None:
     framing (hbase.clj:222-228) -> WireError."""
     header, pos = delimited(data, 0)
     h = fields(header)
-    name = _first(h, 3)
+    name = _first(h, 3, bytes)
     if name is None:
         raise WireError("no method name")
     name = name.decode("utf-8", "replace")
@@ -329,9 +339,9 @@ def parse_response_frame(data: bytes, req_method: str | None) -> dict:
     h = fields(header)
     out = {"call_id": _first(h, 1) or 0,
            "method": req_method or "unknown"}
-    exc = _first(h, 2)
+    exc = _first(h, 2, bytes)
     if exc is not None:
-        name = _first(fields(exc), 1)
+        name = _first(fields(exc), 1, bytes)
         if name is not None:
             out["error"] = name.decode("utf-8", "replace")
     if req_method in ("open-scanner", "next-rows", "close-scanner",

@@ -17,10 +17,11 @@ def _ref_pagerank(edges, damping=0.85, iters=5):
     """Driver-side reference of the documented semantics: uniform init,
     weighted split over out-links, dangling mass teleports uniformly,
     rank' = (1-d)/N + d*(contrib + dangling/N), 9-decimal rounding per
-    round (matching the operator's engine-exactness rule)."""
+    round (matching the operator's engine-exactness rule). A NULL weight
+    counts 0, and a host whose out-weight is 0 is dangling."""
     agg = defaultdict(float)
     for s, t, w in edges:
-        agg[(s, t)] += float(w)
+        agg[(s, t)] += float(w or 0)
     ow = defaultdict(float)
     for (s, _t), w in agg.items():
         ow[s] += w
@@ -28,10 +29,11 @@ def _ref_pagerank(edges, damping=0.85, iters=5):
     n = len(nodes)
     rank = {h: round(1.0 / n, 9) for h in nodes}
     for _ in range(iters):
-        dangling = sum(r for h, r in rank.items() if h not in ow)
+        dangling = sum(r for h, r in rank.items() if ow.get(h, 0.0) <= 0)
         contrib = defaultdict(float)
         for (s, t), w in agg.items():
-            contrib[t] += rank[s] * w / ow[s]
+            if ow[s] > 0:
+                contrib[t] += rank[s] * w / ow[s]
         rank = {
             h: round(
                 (1.0 - damping) / n
@@ -86,6 +88,28 @@ def test_pagerank_no_dangling_fast_path_matches_reference(spark):
     for h, expected in ref.items():
         assert out[h].pagerank == pytest.approx(expected, abs=1e-6)
         assert out[h].out_links == int(ow.get(h, 0))
+    assert sum(r.pagerank for r in out.values()) == pytest.approx(1.0, abs=1e-5)
+
+
+def test_pagerank_zero_out_weight_hosts_are_dangling(spark):
+    # z's only out-edge weighs 0 and n's out-edges are all NULL: neither
+    # can split its rank over out-links, so both teleport it like c
+    # (no out-links at all) and no rank mass leaks
+    edges = [
+        ("a.com", "b.com", 1), ("b.com", "a.com", 2), ("b.com", "c.com", 1),
+        ("z.com", "a.com", 0), ("n.com", "b.com", None),
+        ("n.com", "c.com", None),
+    ]
+    df = spark.createDataFrame(edges, "src_host string, dst_host string, w int")
+    out = {
+        r.host: r
+        for r in host_pagerank(df, weight_col="w", iters=5).collect()
+    }
+    ref, _ = _ref_pagerank(edges)
+    assert set(out) == set(ref)
+    for h, expected in ref.items():
+        assert out[h].pagerank == pytest.approx(expected, abs=1e-6)
+    assert out["z.com"].out_links == 0 and out["n.com"].out_links == 0
     assert sum(r.pagerank for r in out.values()) == pytest.approx(1.0, abs=1e-5)
 
 

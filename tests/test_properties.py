@@ -10,7 +10,7 @@ Spark jobs — so hypothesis can run hundreds of cases in seconds.
 import struct
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from hbase_packet_inspector_spark.operators.reassembly import _reassemble_group
@@ -158,6 +158,8 @@ def test_to_string_binary_spec(data):
 # --- HBase protobuf wire decoder (sources.hbase_wire) ------------------------
 
 @given(st.binary(max_size=200))
+@example(b"\x07\x08\x00\x18\x00\x80\x01\x00")  # method name as a varint
+@example(b"\x02\x08\x01\x02\x08\x01")  # multi result list as a varint
 @settings(max_examples=300, deadline=None)
 def test_wire_parser_never_raises_unexpected(blob):
     # garbage bytes either parse or raise WireError — nothing else escapes

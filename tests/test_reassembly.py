@@ -77,3 +77,38 @@ def test_connections_isolated(spark):
         ],
     )
     assert {(r.port, r.data) for r in rows} == {(40000, b"c1"), (40001, b"c2")}
+
+
+def test_group_frames_each_direction_alone():
+    """One (client, port) group holds both directions, interleaved, with a
+    segment that merges two messages and starts a third: every direction
+    frames against its own buffer and numbers its own msg_seq, exactly as
+    when it is framed alone."""
+    import pandas as pd
+
+    from hbase_packet_inspector_spark.operators.reassembly import (
+        _reassemble_group,
+    )
+
+    req = frame(b"get-1") + frame(b"get-2") + frame(b"multi-3" * 40)
+    res = frame(b"r1" * 30) + frame(b"r2") + frame(b"r3")
+    # (ms, chunk); the merged segment: get-1 and get-2 whole plus the
+    # head of multi-3, whose tail arrives after two response segments
+    inbound = [(0, req[:30]), (7, req[30:])]
+    outbound = [(2, res[:20]), (4, res[20:70]), (9, res[70:])]
+    rows = [dict(chunk(i, ms, d), src_port=40000, dst_port=16020)
+            for i, (ms, d) in enumerate(inbound)]
+    rows += [dict(chunk(10 + i, ms, d), src_port=16020, dst_port=40000)
+             for i, (ms, d) in enumerate(outbound)]
+
+    def framed(chunks):
+        out = _reassemble_group(pd.DataFrame(chunks).sort_values("ts"))
+        return sorted(
+            (r.inbound, r.msg_seq, r.ts, r.server, r.data)
+            for r in out.itertuples())
+
+    both = framed(rows)
+    assert both == sorted(framed(rows[:2]) + framed(rows[2:]))
+    assert [m[4] for m in both if m[0]] == [b"get-1", b"get-2", b"multi-3" * 40]
+    assert [m[4] for m in both if not m[0]] == [b"r1" * 30, b"r2", b"r3"]
+    assert [m[1] for m in both] == [0, 1, 2, 0, 1, 2]
