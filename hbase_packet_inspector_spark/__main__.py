@@ -14,6 +14,7 @@ import argparse
 import sys
 
 from .engine import Engine
+from .schema import DEFAULT_PORTS
 from .session import get_spark
 
 
@@ -27,9 +28,6 @@ def main(argv: list[str] | None = None) -> int:
                      "oracle-checked library against --sf-dir")
     src.add_argument("--list-queries", action="store_true",
                      help="list the registered analytics queries and exit")
-    p.add_argument("--decode", default="hbase", choices=["hbase", "json"],
-                   help="pcap payload decoder: real HBase RPC protobuf "
-                   "(default) or the JSON-framed synthetic seam")
     p.add_argument("--format", default="parquet", choices=["parquet", "json", "kafka-json"])
     p.add_argument("--port", type=int, action="append",
                    help="monitored RPC port(s); default 16020 + 60020 "
@@ -83,8 +81,7 @@ def main(argv: list[str] | None = None) -> int:
             ) as tmp:
                 tmp.write(sys.stdin.buffer.read())
                 pcap_path = tmp.name
-        eng.load_pcap(pcap_path, ports=tuple(args.port or (16020, 60020)),
-                      decode=args.decode)
+        eng.load_pcap(pcap_path, ports=tuple(args.port or DEFAULT_PORTS))
     else:
         eng.load_events(args.events, args.format)
     if args.count is not None or args.duration is not None:

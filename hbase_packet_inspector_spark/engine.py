@@ -3,7 +3,8 @@ CLI's three modes (reference core.clj:499-517, SURVEY.md §3):
 
 - file mode   (`hpi dump.pcap` -> H2 tables -> SQL shell):
     ``Engine.load_pcap(path).register_tables()`` (or ``load_events`` for
-    pre-decoded rpc_events) then ``Engine.sql(...)``
+    pre-decoded rpc_events) then ``Engine.sql(...)``; a capture has one
+    decode path, the HBase RPC protobuf decoder (``sources.hbase_decode``)
 - live mode   (NIC capture -> same tables):
     ``Engine.stream(source_dir)`` — Structured Streaming with the same
     operators; capture itself stays an external agent (pcap has no
@@ -23,68 +24,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .operators.pipeline import correlate, finalize, route, scanner_enrich
-from .operators.reassembly import reassemble
-from .schema import (
-    ACTION_STRUCT,
-    RESULT_STRUCT,
-    RPC_EVENT_SCHEMA,
-    STATE_EXPIRATION_MS,
-)
+from .schema import DEFAULT_PORTS, RPC_EVENT_SCHEMA, STATE_EXPIRATION_MS
 from .session import tune_session
 from .streaming.sink import parse_kafka_spec, to_kafka_records
-
-# Framed-message body schema for the JSON decode seam: the per-method
-# columns the reference's protobuf decoders extract (hbase.clj:110-245,
-# SURVEY.md §2 C1-C13). A production HBase deployment swaps ``from_json``
-# for a protobuf-decoding Pandas UDF with this same output schema — the
-# seam (framed bytes in, wide event columns out) is identical.
-MESSAGE_BODY_SCHEMA = T.StructType(
-    [
-        T.StructField("call_id", T.IntegerType()),
-        T.StructField("method", T.StringType()),
-        T.StructField("table", T.StringType()),
-        T.StructField("region", T.StringType()),
-        T.StructField("row", T.StringType()),
-        T.StructField("stoprow", T.StringType()),
-        T.StructField("cells", T.IntegerType()),
-        T.StructField("durability", T.StringType()),
-        T.StructField("scanner", T.LongType()),
-        T.StructField("caching", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("actions", T.ArrayType(ACTION_STRUCT)),
-        T.StructField("results", T.ArrayType(RESULT_STRUCT)),
-    ]
-)
-
-
-def decode_json_messages(messages: DataFrame) -> DataFrame:
-    """Reassembled framed messages -> RPC_EVENT_SCHEMA rows.
-
-    ``size`` is the framed payload's byte length (the reference stores the
-    RPC message size, hbase.clj:224-227); ``event_id`` is the per-connection
-    message sequence — correlation only uses it as an intra-connection
-    order tie-break after ``ts``.
-    """
-    body = F.from_json(F.col("data").cast("string"), MESSAGE_BODY_SCHEMA)
-    cols = [
-        F.col("msg_seq").alias("event_id"),
-        "ts",
-        "inbound",
-        "client",
-        "port",
-        "server",
-        F.col("j.call_id").alias("call_id"),
-        F.col("j.method").alias("method"),
-        F.octet_length("data").alias("size"),
-        *[F.col(f"j.{c}").alias(c) for c in (
-            "table", "region", "row", "stoprow", "cells", "durability",
-            "scanner", "caching", "error", "actions", "results",
-        )],
-    ]
-    return messages.withColumn("j", body).select(*cols)
 
 
 class Engine:
@@ -119,39 +63,26 @@ class Engine:
             raise ValueError(f"unsupported format: {fmt}")
         return self
 
-    def load_pcap(
-        self,
-        path: str,
-        ports: Sequence[int] = (16020, 60020),
-        decode: str = "hbase",
-    ) -> "Engine":
+    def load_pcap(self, path: str,
+                  ports: Sequence[int] = DEFAULT_PORTS) -> "Engine":
         """File mode from raw capture bytes (``hpi dump.pcap`` analog):
         binaryFile scan -> packet decode -> direction/port tagging -> TCP
-        reassembly -> framed-message decode -> rpc_events.
+        framing + HBase RPC protobuf decode -> rpc_events.
 
-        ``decode='hbase'`` (default) runs the real HBase RPC protobuf
-        decoder (``sources.hbase_decode`` — pure-Python wire format, no
-        google.protobuf), validated against the reference's own pcap
-        fixtures. Framing and decode run in one grouped Python pass keyed
-        ``(client, port)`` (``decode_hbase_chunks``), so the derivation
-        has one shuffle before correlation. ``decode='json'`` parses framed
-        payloads as JSON event bodies (the synthetic-capture seam; see
-        MESSAGE_BODY_SCHEMA) after ``reassemble``, its one shuffle on the
-        same key.
+        The decoder is pure-Python wire format, no google.protobuf
+        (``sources.hbase_wire``). Framing and decode run in one grouped
+        Python pass keyed ``(client, port)`` (``decode_hbase_chunks``), so
+        the derivation has one shuffle before correlation. The committed
+        captures under ``tests/fixtures/hbase_pcap`` check it against
+        their generator's model tables.
 
         The events stay lazy here; ``register_tables`` derives the capture
         once for all four tables."""
         from .sources import pcap as P
+        from .sources.hbase_decode import decode_hbase_chunks
 
         chunks = P.packets_to_chunks(P.read_pcap(self.spark, path), ports)
-        if decode == "hbase":
-            from .sources.hbase_decode import decode_hbase_chunks
-
-            self._events = decode_hbase_chunks(chunks)
-        elif decode == "json":
-            self._events = decode_json_messages(reassemble(chunks))
-        else:
-            raise ValueError(f"unsupported decoder: {decode}")
+        self._events = decode_hbase_chunks(chunks)
         self._from_pcap = True
         return self
 

@@ -59,7 +59,9 @@ def _to_string_binary_py(data: bytes | None) -> str | None:
     return "".join(out)
 
 
-to_string_binary = F.udf(_to_string_binary_py, T.StringType())
+# useArrow=False names the plain pickled-row UDF the type hints would
+# otherwise make PySpark try (and fail, with a UserWarning) to infer
+to_string_binary = F.udf(_to_string_binary_py, T.StringType(), useArrow=False)
 
 _ENCODED_SUFFIX = re.compile(rb"\.([0-9a-f]{32})\.$")
 
@@ -85,4 +87,5 @@ parse_region_name = F.udf(
             T.StructField("region", T.StringType()),
         ]
     ),
+    useArrow=False,
 )

@@ -119,10 +119,10 @@ def reassemble(chunks: DataFrame) -> DataFrame:
 
     One shuffle on ``(client, port)``: each group is one TCP connection,
     both directions, and ``_reassemble_group`` frames each direction
-    against its own buffer. ``Engine.load_pcap(decode="hbase")`` runs the
-    same group function fused with the decode
+    against its own buffer. ``Engine.load_pcap`` runs the same group
+    function fused with the decode
     (``sources.hbase_decode.decode_hbase_chunks``); this layered form feeds
-    the JSON decode and ``decode_hbase_frames``.
+    ``decode_hbase_frames``.
     """
     return (
         chunks.groupBy("client", "port")

@@ -470,11 +470,9 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HBASE_FIXDIR = "/root/reference/dev-resources"
-
 # Decoded capture memo for the CURRENT session only: the pcap scan ->
-# reassembly -> protobuf decode pipeline is the expensive prefix BOTH
-# real-pcap queries share; a deployment decodes a capture once and
+# framing + protobuf decode pipeline is the expensive prefix BOTH
+# capture queries share; a deployment decodes a capture once and
 # queries it many times. Single-entry (latest session wins) so stopped
 # sessions and their checkpointed tables are never pinned for process
 # lifetime; the session object rides in the value so a recycled id()
@@ -483,7 +481,7 @@ _HBASE_FIXDIR = "/root/reference/dev-resources"
 # takes on the finalized capture. A lazy checkpoint registers its RDD
 # when it is planned, so the ids are known as soon as register_tables
 # returns; under AQE that planning also runs the shuffle-map stages
-# (pcap scan, reassembly, decode and the correlation shuffles), so the
+# (pcap scan, the framing + decode pass and correlation), so the
 # memo MISS pays the derivation there and the first action computes
 # only the last stage into the checkpoint. Revalidation checks id-presence in the
 # context's persistent-RDD map, a pure driver-side JVM call, NOT a
@@ -519,15 +517,20 @@ def capture_memo_rdd_ids(spark: SparkSession) -> frozenset:
     return frozenset()
 
 
-def _load_hbase_capture(spark: SparkSession):
-    """Shared capture loader for the real-pcap queries: the reference's own
-    fixtures when present, else a deterministic synthetic JSON-framed
-    capture built from the fixture generator — either way the SAME
-    pipeline (pcap scan -> reassembly -> decode -> correlation) runs and
-    the same four tables register, so every projection keeps its schema
-    on fixture-less deployments."""
-    import tempfile
+# The committed HBase RPC captures (FIXTURES.md §3 scenarios) and the
+# four tables their scenario model says they hold, both written by
+# tools/make_hbase_fixture.py without the engine: the DuckDB oracle of
+# the two capture queries below.
+_HBASE_PCAP_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests", "fixtures", "hbase_pcap",
+)
 
+
+def _load_hbase_capture(spark: SparkSession):
+    """Shared capture loader for the two capture queries: the committed
+    captures through ``Engine.load_pcap`` (pcap scan -> framing +
+    protobuf decode -> correlation) on the default ports."""
     from ..engine import Engine
 
     if _HBASE_CAPTURE_MEMO and _HBASE_CAPTURE_MEMO[0][0] is spark:
@@ -544,36 +547,7 @@ def _load_hbase_capture(spark: SparkSession):
             return tables
         _HBASE_CAPTURE_MEMO[:] = []
 
-    eng = Engine(spark)
-    if os.path.isdir(_HBASE_FIXDIR):
-        eng.load_pcap(
-            f"{_HBASE_FIXDIR}/{{sequentialWrite,randomRead,scan}}.pcap",
-            ports=(16201,),
-        )
-    else:  # pragma: no cover - fixture-less deployment
-        from ..sources import pcap as P
-        from ..sources.fixtures import random_read
-        import json as _json
-        import struct as _st
-
-        rows = random_read()
-        pkts = []
-        for r in rows:
-            body = {k: v for k, v in r.items()
-                    if k in ("call_id", "method", "table", "cells") and v is not None}
-            b = _json.dumps(body).encode()
-            frame = _st.pack(">i", len(b)) + b
-            if r["inbound"]:
-                pkts.append((r["ts"].timestamp(), r["client"], r["port"],
-                             r["server"], 16020, frame))
-            else:
-                pkts.append((r["ts"].timestamp(), r["server"], 16020,
-                             r["client"], r["port"], frame))
-        # Spark's file index skips names starting with '_' or '.'
-        tmp = os.path.join(tempfile.mkdtemp(prefix="hpi-synth-"), "synth.pcap")
-        with open(tmp, "wb") as f:
-            f.write(P.build_pcap(pkts))
-        eng.load_pcap(tmp, ports=(16020,), decode="json")
+    eng = Engine(spark).load_pcap(os.path.join(_HBASE_PCAP_DIR, "*.pcap"))
     # register_tables checkpoints the finalized capture; the diff names
     # that checkpoint's RDDs for revalidation
     before = _persistent_rdd_ids(spark)
@@ -583,43 +557,23 @@ def _load_hbase_capture(spark: SparkSession):
     return tables
 
 
-# Committed snapshot of the decoded reference-capture tables
-# (tools/materialize_hbase_fixture.py): pins the wire decoder's output so
-# DuckDB can independently aggregate it — the oracle for the two real-pcap
-# queries below. Decode is deterministic (fixed pcap bytes in, pure
-# function out), so a mismatch means the decoder/correlation changed.
-_HBASE_SNAPSHOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "tests", "fixtures", "hbase_capture",
-)
-
-
-# The snapshot oracle only verifies the REAL-fixture decode; on a
-# fixture-less deployment the loader falls back to the synthetic capture,
-# whose rollups legitimately differ — register rows-only there instead of
-# guaranteeing a false mismatch.
-_PCAP_ORACLES_VALID = os.path.isdir(_HBASE_FIXDIR) and os.path.isdir(
-    _HBASE_SNAPSHOT
-)
-
-
 @register(
     "hbase_pcap_decode",
     f"""
     SELECT method, count(*) AS n,
            CAST(sum(cells) AS BIGINT) AS total_cells,
            count(elapsed) AS n_matched
-    FROM read_parquet('{_HBASE_SNAPSHOT}/responses.parquet')
+    FROM read_parquet('{_HBASE_PCAP_DIR}/responses/*.parquet')
     GROUP BY method
-    """ if _PCAP_ORACLES_VALID else None,
-    doc="The full capture pipeline on REAL HBase 1.2.6 RPC traffic (the "
-    "reference's own pcap fixtures): binary scan -> packet decode -> TCP "
-    "reassembly -> pure-Python protobuf decode (sources.hbase_wire) -> "
-    "correlation -> per-method traffic/latency rollup. Falls back to the "
-    "deterministic synthetic JSON capture when the reference fixtures "
-    "aren't present. The oracle aggregates the committed decode snapshot "
-    "(tests/fixtures/hbase_capture) in DuckDB, hash-pinning the decoder's "
-    "end-to-end output, not just its row count.",
+    """,
+    doc="The full capture pipeline on HBase 1.x RPC protobuf captures of "
+    "the reference's pcap fixture workloads (tests/fixtures/hbase_pcap): "
+    "binary scan -> packet decode -> TCP framing + pure-Python protobuf "
+    "decode (sources.hbase_wire) -> correlation -> per-method "
+    "traffic/latency rollup, including an orphan and a past-TTL response "
+    "(method 'unknown', no elapsed). The oracle aggregates the generator's "
+    "own model of the responses table in DuckDB, so a decoder or "
+    "correlation regression is a value mismatch, not a row-count drift.",
     tags=("pipeline", "pcap", "protobuf", "decode"),
 )
 def hbase_pcap_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,14 +597,14 @@ def hbase_pcap_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(DISTINCT method) AS n_methods,
            CAST(sum(batch) AS BIGINT) AS total_batch,
            CAST(sum(cells) AS BIGINT) AS total_cells
-    FROM read_parquet('{_HBASE_SNAPSHOT}/requests.parquet')
+    FROM read_parquet('{_HBASE_PCAP_DIR}/requests/*.parquet')
     GROUP BY 1
-    """ if _PCAP_ORACLES_VALID else None,
-    doc="Per-TABLE rollup of the real-capture decode: request counts, "
+    """,
+    doc="Per-TABLE rollup of the capture decode: request counts, "
     "batch/multi sizes, and cell totals grouped by the HBase table each "
-    "RPC addresses (the region-name decode exercised end-to-end on real "
-    "1.2.6 traffic, incl. the scanner-state table inheritance for "
-    "next-rows calls that don't carry a region). Same pipeline as "
+    "RPC addresses (the region-name decode exercised end-to-end, incl. "
+    "the scanner-state table inheritance for next-rows calls that don't "
+    "carry a region). Same pipeline and committed model as "
     "hbase_pcap_decode, different projection axis.",
     tags=("pipeline", "pcap", "protobuf", "decode", "table"),
 )

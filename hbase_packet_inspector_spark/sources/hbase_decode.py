@@ -1,7 +1,7 @@
 """Framed HBase RPC bytes -> rpc_events rows: the REAL protobuf decode for
-the C1-C13 seam (no google.protobuf — see ``hbase_wire``), validated
-end-to-end against the reference's own pcap fixtures
-(dev-resources/*.pcap, test/core_test.clj:248-377 invariants).
+the C1-C13 seam (no google.protobuf — see ``hbase_wire``), checked
+end-to-end on the committed captures of the reference's fixture workloads
+(tests/fixtures/hbase_pcap, test/core_test.clj:248-377 invariants).
 
 Response bodies can only be parsed knowing the REQUEST's method
 (hbase.clj:71-98: parse-response dispatches on the pending request), so

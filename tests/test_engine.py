@@ -1,8 +1,11 @@
 """Engine facade tests: file-mode load -> register -> SQL over the 4 views
 (the reference's H2-shell workflow end-to-end)."""
 
+import os
+
 from hbase_packet_inspector_spark.engine import Engine
 from hbase_packet_inspector_spark.sources import fixtures as fx
+from perfbench import wire
 
 
 def test_file_mode_sql(spark, tmp_path):
@@ -126,26 +129,29 @@ def test_kafka_json_file_mode(spark, tmp_path):
     assert out.n == 5 and out.matched == 5
 
 
+def _call(call_id: int, method: str, param: bytes, body: bytes,
+          t: float, elapsed_s: float) -> list[tuple]:
+    """One protobuf request/response pair as ``build_pcap`` packets."""
+    return [
+        (t, "10.0.0.7", 40123, "10.0.0.1", 16020,
+         wire.request_frame(call_id, method, param)),
+        (t + elapsed_s, "10.0.0.1", 16020, "10.0.0.7", 40123,
+         wire.response_frame(call_id, body)),
+    ]
+
+
 def test_cli_pcap_mode(spark, tmp_path, capsys):
     # CLI smoke for the capture file mode with count bound
-    import json as _json
-    import struct as _st
     from hbase_packet_inspector_spark.sources import pcap as P
     from hbase_packet_inspector_spark.__main__ import main
 
-    def fr(obj):
-        b = _json.dumps(obj).encode()
-        return _st.pack(">i", len(b)) + b
-
-    pkts = [
-        (1000.0, "10.0.0.7", 40123, "10.0.0.1", 16020,
-         fr({"call_id": 1, "method": "get", "table": "t1"})),
-        (1000.5, "10.0.0.1", 16020, "10.0.0.7", 40123, fr({"call_id": 1})),
-    ]
+    region = b"t1,,1.0123456789abcdef0123456789abcdef."
+    pkts = _call(1, "Get", wire.get_request(region, b"r1", 1),
+                 wire.get_response(1), 1000.0, 0.5)
     p = tmp_path / "cli.pcap"
     p.write_bytes(P.build_pcap(pkts))
 
-    rc = main(["--pcap", str(p), "--decode", "json", "--count", "10", "--sql",
+    rc = main(["--pcap", str(p), "--count", "10", "--sql",
                "SELECT method, elapsed FROM responses"])
     out = capsys.readouterr().out
     assert rc == 0 and "get" in out and "500" in out
@@ -156,29 +162,21 @@ def test_cli_pcap_stdin(spark, capsys, monkeypatch):
     # stdin; the CLI buffers the stream to a temp file and runs the same
     # pipeline
     import io
-    import json as _json
-    import struct as _st
     from hbase_packet_inspector_spark.sources import pcap as P
     from hbase_packet_inspector_spark.__main__ import main
 
-    def fr(obj):
-        b = _json.dumps(obj).encode()
-        return _st.pack(">i", len(b)) + b
-
-    pkts = [
-        (1000.0, "10.0.0.7", 40123, "10.0.0.1", 16020,
-         fr({"call_id": 7, "method": "scan", "table": "piped"})),
-        (1000.25, "10.0.0.1", 16020, "10.0.0.7", 40123, fr({"call_id": 7})),
-    ]
+    region = b"piped,,1.0123456789abcdef0123456789abcdef."
+    pkts = _call(7, "Scan", wire.scan_open_request(region, b"a", b"b", 20),
+                 wire.scan_response([], 42), 1000.0, 0.25)
 
     class FakeStdin:
         buffer = io.BytesIO(P.build_pcap(pkts))
 
     monkeypatch.setattr("sys.stdin", FakeStdin())
-    rc = main(["--pcap", "-", "--decode", "json", "--sql",
+    rc = main(["--pcap", "-", "--sql",
                "SELECT method, table, elapsed FROM responses"])
     out = capsys.readouterr().out
-    assert rc == 0 and "scan" in out and "piped" in out and "250" in out
+    assert rc == 0 and "open-scanner" in out and "piped" in out and "250" in out
 
 
 def test_cli_dataprep_and_list(capsys):
@@ -197,45 +195,23 @@ def test_cli_dataprep_and_list(capsys):
     assert rc == 2
 
 
-def _fixture_capture(tmp_path) -> str:
-    """The fixture workloads as a JSON-framed pcap (decode='json'):
-    gets, a 100-put multi and a scanner session, so all four tables
-    have rows."""
-    import json as _json
-    import struct as _st
-
-    from hbase_packet_inspector_spark.engine import MESSAGE_BODY_SCHEMA
-    from hbase_packet_inspector_spark.sources import pcap as P
-
-    rows = fx.random_read() + fx.sequential_write() + [
-        dict(r, port=41000) for r in fx.scan()
-    ]
-    keys = MESSAGE_BODY_SCHEMA.fieldNames()
-    pkts = []
-    for r in rows:
-        body = _json.dumps({k: r[k] for k in keys if r.get(k) is not None})
-        frame = _st.pack(">i", len(body)) + body.encode()
-        ends = [(r["client"], r["port"]), (r["server"], 16020)]
-        if not r["inbound"]:
-            ends.reverse()
-        pkts.append((r["ts"].timestamp(), *ends[0], *ends[1], frame))
-    path = tmp_path / "fixtures.pcap"
-    path.write_bytes(P.build_pcap(pkts))
-    return str(path)
+# gets, a 100-put multi and a scanner session, so all four tables have rows
+FIXTURE_CAPTURE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "hbase_pcap",
+    "{sequentialWrite,randomRead,scan}.pcap")
 
 
 def _multiset(df) -> list[str]:
     return sorted(repr(r.asDict(recursive=True)) for r in df.collect())
 
 
-def test_file_mode_derives_capture_once(spark, tmp_path):
+def test_file_mode_derives_capture_once(spark):
     """After load_pcap, every table reads the checkpointed finalized frame:
     no Python-worker stage (pcap scan, reassembly, decode) is left in any
     table's plan, and the rows equal the uncheckpointed pipeline's."""
     from hbase_packet_inspector_spark.operators.pipeline import build_tables
 
-    path = _fixture_capture(tmp_path)
-    eng = Engine(spark).load_pcap(path, ports=(16020,), decode="json")
+    eng = Engine(spark).load_pcap(FIXTURE_CAPTURE)
     want = build_tables(eng._events)
     eng.register_tables()
     assert set(eng.tables) == set(want)

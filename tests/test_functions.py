@@ -67,3 +67,19 @@ def test_udfs_registered(spark):
     r = df.collect()[0]
     assert r.s == "k\\x00y"
     assert r.tr.table == "k\\x00y"
+
+
+def test_package_import_emits_no_user_warning():
+    """Both UDFs name their eval type, so PySpark does not try to infer
+    one from the type hints and warn on every import of the package."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c",
+         "import hbase_packet_inspector_spark.engine, "
+         "hbase_packet_inspector_spark.plans"],
+        cwd=root, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr

@@ -1,31 +1,22 @@
 """Pcap file-mode tests: binary capture bytes -> packets -> chunks ->
-reassembled messages -> rpc_events -> the 4 SQL views, mirroring the
-reference's end-to-end fixture tests (core_test.clj:248-377) with a
-synthesized capture instead of dev-resources/*.pcap."""
+framed messages -> rpc_events -> the 4 SQL views, mirroring the
+reference's end-to-end fixture tests (core_test.clj:248-377) with
+synthesized HBase RPC protobuf captures (``perfbench.wire``)."""
 
-import json
+import os
 import struct
 
 from hbase_packet_inspector_spark.engine import Engine
 from hbase_packet_inspector_spark.sources import pcap as P
+from perfbench import wire
 
 CLIENT = "10.0.0.7"
 SERVER = "10.0.0.1"
 CPORT = 40123
 SPORT = 16020
-
-
-def frame(obj: dict) -> bytes:
-    body = json.dumps(obj).encode()
-    return struct.pack(">i", len(body)) + body
-
-
-def req(call_id, method="get", **kw):
-    return frame({"call_id": call_id, "method": method, "table": "t1", **kw})
-
-
-def res(call_id, elapsed_src=None, **kw):
-    return frame({"call_id": call_id, **kw})
+REGION = b"t1,,1.0123456789abcdef0123456789abcdef."
+FIXDIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                      "fixtures", "hbase_pcap")
 
 
 def write_capture(tmp_path, packets, **kwargs):
@@ -84,21 +75,27 @@ def test_pcap_to_sql_end_to_end(spark, tmp_path):
     # two request/response pairs; the response to call 1 is fragmented
     # across two packets and call 2's request shares a packet with call 1's
     # (Nagle), exercising B4/B5 on real framing
-    r2 = res(2, cells=1)
+    r1 = wire.response_frame(1, wire.get_response(3))
+    r2 = wire.response_frame(2, wire.mutate_response())
     packets = [
-        (1000.0, CLIENT, CPORT, SERVER, SPORT, req(1, "get", row="r1")),
-        (1000.2, CLIENT, CPORT, SERVER, SPORT, req(2, "put", cells=2, durability="use_default")),
-        (1000.6, SERVER, SPORT, CLIENT, CPORT, res(1, cells=3)[:7]),
-        (1000.8, SERVER, SPORT, CLIENT, CPORT, res(1, cells=3)[7:] + r2[:5]),
+        (1000.0, CLIENT, CPORT, SERVER, SPORT, wire.request_frame(
+            1, "Get", wire.get_request(REGION, b"r1", 1))),
+        (1000.2, CLIENT, CPORT, SERVER, SPORT, wire.request_frame(
+            2, "Mutate", wire.mutate_request(REGION, b"r2", [b"a", b"b"], 0))),
+        (1000.6, SERVER, SPORT, CLIENT, CPORT, r1[:7]),
+        (1000.8, SERVER, SPORT, CLIENT, CPORT, r1[7:] + r2[:5]),
         (1001.0, SERVER, SPORT, CLIENT, CPORT, r2[5:]),
     ]
-    eng = Engine(spark).load_pcap(write_capture(tmp_path, packets), decode="json")
+    assert len(r1) > 7 and len(r2) > 5
+    eng = Engine(spark).load_pcap(write_capture(tmp_path, packets))
     eng.register_tables()
 
     reqs = {r.call_id: r for r in eng.sql("SELECT * FROM requests").collect()}
     assert set(reqs) == {1, 2}
     assert reqs[1].method == "get" and reqs[1].row == "r1"
+    assert reqs[1].table == "t1"
     assert reqs[2].method == "put" and reqs[2].cells == 2
+    assert reqs[2].durability == "use_default"
 
     resp = {r.call_id: r for r in eng.sql(
         "SELECT * FROM responses ORDER BY call_id").collect()}
@@ -189,16 +186,13 @@ def test_pcapng_matches_classic_pcap(spark, tmp_path):
 
 def test_pcapng_reference_fixture_reencapsulation(spark, tmp_path):
     """hbase_pcap_decode invariants on a pcapng RE-CAPTURE of a
-    reference fixture: parse one of the reference's real HBase pcaps,
-    re-serialize its packet stream as pcapng, and require the FULL
-    pipeline (reassembly -> protobuf decode -> correlate -> tables) to
-    produce identical requests/responses tables from both containers."""
-    import os
-    import pytest
-    fix = "/root/reference/dev-resources/randomRead.pcap"
-    if not os.path.exists(fix):
-        pytest.skip("reference pcap fixtures not present")
-    blob = open(fix, "rb").read()
+    committed fixture: parse the randomRead capture, re-serialize its
+    packet stream as pcapng, and require the FULL pipeline (framing ->
+    protobuf decode -> correlate -> tables) to produce identical
+    requests/responses tables from both containers."""
+    fix = os.path.join(FIXDIR, "randomRead.pcap")
+    with open(fix, "rb") as f:
+        blob = f.read()
     pkts = list(P._parse_capture_bytes("f", blob))
     assert pkts, "fixture parsed empty"
     # re-encapsulate the decoded packet stream (raw-IP framing: the
@@ -212,8 +206,7 @@ def test_pcapng_reference_fixture_reencapsulation(spark, tmp_path):
     ng.write_bytes(P.build_pcapng(tuples, linktype=P.LINKTYPE_RAW_IP))
 
     def table_sets(path):
-        eng = Engine(spark).load_pcap(path, ports=(16201,))
-        t = eng.register_tables().tables
+        t = Engine(spark).load_pcap(path).register_tables().tables
         return {
             name: sorted(
                 tuple((k, str(v)) for k, v in sorted(r.asDict(True).items())
@@ -222,7 +215,9 @@ def test_pcapng_reference_fixture_reencapsulation(spark, tmp_path):
             for name in ("requests", "responses")
         }
 
-    assert table_sets(str(ng)) == table_sets(fix)
+    want = table_sets(fix)
+    assert want["requests"] and want["responses"]
+    assert table_sets(str(ng)) == want
 
 
 def test_pcapng_garbage_never_raises():

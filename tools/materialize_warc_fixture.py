@@ -1,5 +1,5 @@
 """Materialize a deterministic committed WARC crawl fixture + its parsed
-snapshot — the warc-source analog of materialize_hbase_fixture.py.
+snapshot.
 
 Builds ``tests/fixtures/warc_capture/sample.warc.gz`` (a small synthetic
 crawl: warcinfo + HTTP request/response pairs over a handful of hosts,
