@@ -3,8 +3,16 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Timing is end-to-end per query (plan + execute + collect-to-count) after a
-one-time warmup query to amortize JVM/codegen startup.
+Timing is end-to-end per query: build the plan, execute it, and write
+every row to Spark's benchmarking sink (``write.format("noop")``,
+SPARK-26550), after a one-time warmup pass to amortize JVM/codegen
+startup. A bare row count would let Catalyst prune every output
+expression (and read parquet row-count metadata for a narrow query),
+timing part of the work; the noop write computes every column and keeps
+none. ``run_noop`` and ``release`` below are the one timed action and the
+one release sweep; ``tools/isolate.py`` imports both. Both output lines
+carry ``"timed_action": "noop"``; older records timed a row count and
+have no such field.
 
 Measurement discipline (round-5 rework — VERDICT_r4 item 1): this box is
 shared and the same query can measure 2-3x apart run-to-run under
@@ -68,6 +76,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hbase_packet_inspector_spark import plans
 from hbase_packet_inspector_spark.session import get_spark
+from perfbench import probes
 
 # Headline set: one per operator family (agg, percentile, topk, window,
 # as-of correlation, star join, rollup, setop, anti join, dedup/similarity
@@ -366,85 +375,6 @@ def _quiesce(cpus: int, max_wait_sec: float = 300.0) -> tuple[bool, float]:
     return load > threshold, load
 
 
-class _CpuMeter:
-    """Mid-run contention meter (the r9 verdict gap: `_quiesce` checks
-    load once at START; nothing re-checked while the record was taken).
-    Loadavg is useless mid-run — the bench itself saturates the box —
-    so instead each query window splits /proc/stat's total busy ticks
-    into OURS (this process tree: the python driver, the local-mode
-    JVM, its Python workers — walked via the ppid chain) and EVERYTHING
-    ELSE.  A query's ``external share`` is the fraction of the box's
-    total CPU capacity consumed by foreign processes while it was being
-    timed; windows above _EXT_THRESHOLD mark the query (and the record)
-    contended-mid-run."""
-
-    def __init__(self) -> None:
-        self._tck = float(os.sysconf("SC_CLK_TCK"))
-        self._ncpu = os.cpu_count() or 1
-
-    def _total_busy(self) -> int:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return sum(vals) - vals[3] - (vals[4] if len(vals) > 4 else 0)
-
-    def _tree_cpu(self) -> int:
-        me = os.getpid()
-        ppid: dict[int, int] = {}
-        cpu: dict[int, int] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as f:
-                    st = f.read()
-            except OSError:
-                continue  # raced with process exit
-            # comm can contain spaces/parens: split after the LAST ')'
-            rest = st.rsplit(")", 1)[-1].split()
-            pid = int(d)
-            ppid[pid] = int(rest[1])
-            # utime+stime PLUS reaped-child cutime/cstime: Spark Python
-            # workers that exit between the two samples would otherwise
-            # vanish from the tree delta and be misattributed as foreign
-            # CPU (a still-live worker double-counts only while alive in
-            # BOTH samples, so the delta stays correct once it's reaped).
-            cpu[pid] = (int(rest[11]) + int(rest[12])
-                        + int(rest[13]) + int(rest[14]))
-        if me == 1:
-            # Driver is PID 1 (containers): every process is a descendant,
-            # and the `while p > 1` walk below would never match — count
-            # the whole box as ours rather than marking every query
-            # contended.
-            return sum(cpu.values())
-        total = 0
-        for pid in cpu:
-            p, seen = pid, set()
-            while p > 1 and p not in seen:
-                if p == me:
-                    total += cpu[pid]
-                    break
-                seen.add(p)
-                p = ppid.get(p, 0)
-        return total
-
-    def sample(self) -> tuple[float, int, int]:
-        try:
-            return (time.monotonic(), self._total_busy(), self._tree_cpu())
-        except OSError:  # non-Linux /proc shape: meter degrades to 0
-            return (time.monotonic(), 0, 0)
-
-    def external_share(self, a: tuple, b: tuple) -> float:
-        wall = b[0] - a[0]
-        if wall <= 0:
-            return 0.0
-        # the tree delta can go NEGATIVE across a window (pid reuse, a
-        # subtree reaped by a process outside the tree): floor it at 0
-        # and cap the share at 1.0 — a share above the box's whole
-        # capacity is always a metering artifact, not a measurement
-        ext = max(0, (b[1] - a[1]) - max(0, b[2] - a[2]))
-        return min(1.0, ext / self._tck / (wall * self._ncpu))
-
-
 _EXT_THRESHOLD = 0.125  # foreign processes holding >1/8 of the box
 
 
@@ -465,7 +395,7 @@ class _JvmMeter:
       blocks — the iterative queries (components / k_core / HITS /
       logreg) each leave several behind, so at 238 registrations the
       block manager accumulates hundreds of orphaned block sets unless
-      they are explicitly unpersisted (see _release_rdds)."""
+      they are explicitly unpersisted (see release)."""
 
     def __init__(self, spark) -> None:
         jvm = spark.sparkContext._jvm
@@ -487,35 +417,36 @@ class _JvmMeter:
             return 0, 0, 0
 
 
-def _release_rdds(spark) -> int:
-    """Unpersist every persistent RDD — the localCheckpoint residue that
-    spark.catalog.clearCache() does not touch. Bench-only hygiene: a
-    DataFrame built on a localCheckpointed plan is invalidated by this,
-    but between bench queries nothing is reused, and the leftover block
-    sets are exactly the session-cumulative state the r10 record
-    degradation tracked. The ONE deliberately-reused block set — the
-    decoded-capture memo (one bounded test capture) — is skipped, so
-    the two real-pcap queries stop paying a full rebuild per query (the
-    r11 0.27->0.82 s regression) while the iterative queries' orphans
-    still drain. Returns the number released."""
+def run_noop(spark, q, sf_dir: str, label: str) -> float:
+    """One timed run of registered query ``q`` at ``sf_dir``: build it and
+    write every row to the noop sink. Its jobs carry ``label`` as their
+    description, so ``perfbench.probes.stages(spark, label)`` finds its
+    stages afterwards. Returns wall seconds."""
+    sc = spark.sparkContext
+    sc.setJobDescription(label)
     try:
-        from hbase_packet_inspector_spark.plans.pipeline_queries import (
-            capture_memo_rdd_ids,
-        )
+        t0 = time.perf_counter()
+        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+    finally:
+        sc.setJobDescription(None)
 
-        keep = capture_memo_rdd_ids(spark)
-        m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        n = 0
-        it = m.iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in keep:
-                continue
-            kv._2().unpersist(False)
-            n += 1
-        return n
-    except Exception:
-        return 0
+
+def release(spark) -> int:
+    """The sweep between runs: drop cached plans, then unpersist every
+    persistent RDD, the localCheckpoint residue that
+    spark.catalog.clearCache() does not touch. A DataFrame built on a
+    localCheckpointed plan is invalidated by this, but between runs
+    nothing is reused, and every run then starts from the same cache
+    state. Returns the number of RDDs released."""
+    spark.catalog.clearCache()
+    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    n = 0
+    it = m.valuesIterator()
+    while it.hasNext():
+        it.next().unpersist(False)
+        n += 1
+    return n
 
 
 def _write_local_record(record: dict) -> None:
@@ -578,10 +509,10 @@ def main() -> None:
         if q is None:
             continue
         try:
-            q.fn(spark, warm_dir).count()
+            run_noop(spark, q, warm_dir, f"warmup {name}")
         except Exception:
             pass
-        spark.catalog.clearCache()
+        release(spark)
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
@@ -589,7 +520,7 @@ def main() -> None:
     ext_share: dict[str, float] = {}
     gc_ms: dict[str, int] = {}
     heap_mb: dict[str, int] = {}
-    meter = _CpuMeter()
+    tree = probes.ProcTree()
     jmeter = _JvmMeter(spark)
     rdd_peak = 0
     import gc as _pygc
@@ -599,22 +530,16 @@ def main() -> None:
         if q is None:
             continue
         runs: list[float] = []
-        n = 0
-        m0 = meter.sample()
+        window = probes.CpuWindow(tree)
         j0 = jmeter.sample()
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            n = q.fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-            # drop persisted frames (e.g. LSH signature caches) between
-            # runs/queries so earlier work's executor memory doesn't tax
-            # later ones — and so every repeat pays the same cache state
-            spark.catalog.clearCache()
-        # localCheckpoint residue is NOT covered by clearCache: release
-        # it per query so the block manager never accumulates orphaned
-        # block sets across the (growing) registry — the r11 bounded fix
-        # for the long-session record degradation.
-        rdd_peak = max(rdd_peak, _release_rdds(spark))
+        for i in range(repeats):
+            runs.append(run_noop(spark, q, sf_dir, f"{name} run {i}"))
+            # drop persisted frames and localCheckpoint residue between
+            # runs so earlier work's executor memory doesn't tax later
+            # ones, every repeat pays the same cache state, and the block
+            # manager never accumulates orphaned block sets across the
+            # registry (the r11 fix for long-session degradation)
+            rdd_peak = max(rdd_peak, release(spark))
         if (qi + 1) % 25 == 0:
             # flush py4j's lazy JVM-object deletion queue (it drains on
             # PYTHON gc), then hint a full collection so heap_mb tracks
@@ -625,7 +550,8 @@ def main() -> None:
             except Exception:
                 pass
         j1 = jmeter.sample()
-        ext_share[name] = round(meter.external_share(m0, meter.sample()), 3)
+        # a share above the box's whole capacity is a metering artifact
+        ext_share[name] = round(min(1.0, window.close()[1]), 3)
         gc_ms[name] = j1[0] - j0[0]
         heap_mb[name] = j1[1]
         med = statistics.median(runs)
@@ -635,7 +561,7 @@ def main() -> None:
         print(
             f"# {name}: min {timings[name]:.3f}s med {medians[name]:.3f}s "
             f"spread {spread[name]:.2f} ext {ext_share[name]:.2f} "
-            f"gc {gc_ms[name]}ms heap {heap_mb[name]}MB ({n} rows)",
+            f"gc {gc_ms[name]}ms heap {heap_mb[name]}MB",
             file=sys.stderr,
         )
 
@@ -647,6 +573,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "repeats": repeats,
+        "timed_action": "noop",
         "contended": contended,
         "load_at_start": load0,
         # mid-run contention (r10): per-query share of the box's CPU
@@ -657,7 +584,7 @@ def main() -> None:
         "ext_cpu_share": ext_share,
         # session-degradation forensics (r11): per-query JVM GC delta,
         # heap after the query, and the peak persistent-RDD count seen
-        # before per-query release — the counters that adjudicate
+        # before each run's release — the counters that adjudicate
         # "code regression" vs "session-cumulative JVM state"
         "gc_total_ms": sum(gc_ms.values()),
         "heap_peak_mb": max(heap_mb.values()) if heap_mb else 0,
@@ -690,6 +617,7 @@ def main() -> None:
                 "unit": "sec",
                 "n_queries": len(timings),
                 "repeats": repeats,
+                "timed_action": "noop",
                 "contended": contended,
                 "load_at_start": load0,
                 "ext_cpu_max": max(ext_share.values()) if ext_share else 0.0,

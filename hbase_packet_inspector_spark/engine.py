@@ -124,8 +124,8 @@ class Engine:
         checkpoint, unlike ``cache()``, is not matched by plan, so a later
         load of the same (rotated) path never reads these blocks, and the
         ContextCleaner frees them once the tables are dropped. Its blocks
-        do not survive a lost executor — the same trade the capture memo
-        and the graph round frames make.
+        do not survive a lost executor — the same trade the graph round
+        frames make.
 
         After ``load_events`` the tables stay lazy views that submit no job
         here: under AQE even a lazy checkpoint runs its shuffle-map stages

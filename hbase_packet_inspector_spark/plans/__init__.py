@@ -24,56 +24,6 @@ except ImportError:
 # CORRECTNESS_r{N}.json lands; new queries register with no green row
 # and land at the front automatically.
 _UNVERIFIED_FIRST = (
-    "session_concurrency",  # latest green r0
-    "cuped_adjusted_lift",  # latest green r0
-    "median_of_means",  # latest green r0
-    "pareto_frontier",  # latest green r0
-    "supplier_ship_intervals",  # latest green r0
-    "bootstrap_price_ci",  # latest green r0
-    "km_repurchase_survival",  # latest green r0
-    "theil_decomposition",  # latest green r0
-    "benford_digit_audit",  # latest green r0
-    "weighted_sample_tokens",  # latest green r0
-    "dp_noisy_counts",  # latest green r0
-    "quantile_normalize_binned",  # latest green r0
-    "retrieval_rbo",  # latest green r0
-    "isotonic_calibration_binned",  # latest green r0
-    "psi_drift_binned",  # latest green r0
-    "rank_sum_test",  # latest green r0
-    "chisq_independence",  # latest green r0
-    "warc_source_stats",  # latest green r6
-    "warc_crawl_curation",  # latest green r6
-    "warc_media_extract",  # latest green r6
-    "traffic_per_method",  # latest green r7
-    "latency_percentiles",  # latest green r7
-    "top_hot_users",  # latest green r7
-    "events_per_minute",  # latest green r7
-    "event_type_share",  # latest green r7
-    "distinct_users_by_type",  # latest green r7
-    "sessionize",  # latest green r7
-    "asof_correlate",  # latest green r7
-    "scanner_enrich",  # latest green r7
-    "json_props_bucket",  # latest green r7
-    "value_histogram",  # latest green r7
-    "rolling_avg_per_user",  # latest green r7
-    "user_event_pivot",  # latest green r7
-    "approx_distinct_users",  # latest green r7
-    "asof_last_click",  # latest green r7
-    "conversion_funnel",  # latest green r7
-    "range_join_counts",  # latest green r7
-    "top_event_paths",  # latest green r7
-    "cohort_retention",  # latest green r7
-    "key_skew_report",  # latest green r7
-    "dedup_cluster_sizes",  # latest green r7
-    "dedup_keep_best",  # latest green r7
-    "dedup_keep_best_lsh",  # latest green r7
-    "pii_scrub",  # latest green r7
-    "pack_sequences",  # latest green r7
-    "decontaminate",  # latest green r7
-    "dedup_clusters_converged",  # latest green r7
-    "logreg2",  # latest green r7
-    "pq_adc_topk",  # latest green r7
-    "ivfpq_topk",  # latest green r7
     "pq_recall",  # latest green r7
     "doc_chunks",  # latest green r7
     "chunk_dedup",  # latest green r7
@@ -294,6 +244,56 @@ _UNVERIFIED_FIRST = (
     "degree_distribution",  # latest green r11
     "vocab_growth_binned",  # latest green r11
     "degree_assortativity",  # latest green r11
+    "traffic_per_method",  # latest green r13
+    "latency_percentiles",  # latest green r13
+    "top_hot_users",  # latest green r13
+    "events_per_minute",  # latest green r13
+    "event_type_share",  # latest green r13
+    "distinct_users_by_type",  # latest green r13
+    "sessionize",  # latest green r13
+    "asof_correlate",  # latest green r13
+    "scanner_enrich",  # latest green r13
+    "json_props_bucket",  # latest green r13
+    "value_histogram",  # latest green r13
+    "rolling_avg_per_user",  # latest green r13
+    "user_event_pivot",  # latest green r13
+    "approx_distinct_users",  # latest green r13
+    "asof_last_click",  # latest green r13
+    "conversion_funnel",  # latest green r13
+    "range_join_counts",  # latest green r13
+    "top_event_paths",  # latest green r13
+    "cohort_retention",  # latest green r13
+    "key_skew_report",  # latest green r13
+    "session_concurrency",  # latest green r13
+    "cuped_adjusted_lift",  # latest green r13
+    "median_of_means",  # latest green r13
+    "pareto_frontier",  # latest green r13
+    "supplier_ship_intervals",  # latest green r13
+    "bootstrap_price_ci",  # latest green r13
+    "km_repurchase_survival",  # latest green r13
+    "theil_decomposition",  # latest green r13
+    "benford_digit_audit",  # latest green r13
+    "dedup_cluster_sizes",  # latest green r13
+    "dedup_keep_best",  # latest green r13
+    "dedup_keep_best_lsh",  # latest green r13
+    "pii_scrub",  # latest green r13
+    "pack_sequences",  # latest green r13
+    "decontaminate",  # latest green r13
+    "dedup_clusters_converged",  # latest green r13
+    "logreg2",  # latest green r13
+    "pq_adc_topk",  # latest green r13
+    "ivfpq_topk",  # latest green r13
+    "weighted_sample_tokens",  # latest green r13
+    "dp_noisy_counts",  # latest green r13
+    "quantile_normalize_binned",  # latest green r13
+    "retrieval_rbo",  # latest green r13
+    "isotonic_calibration_binned",  # latest green r13
+    "psi_drift_binned",  # latest green r13
+    "rank_sum_test",  # latest green r13
+    "chisq_independence",  # latest green r13
+    "warc_source_stats",  # latest green r13
+    "warc_crawl_curation",  # latest green r13
+    "warc_media_extract",  # latest green r13
 )
 
 

@@ -6042,7 +6042,7 @@ def crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return WB.crawl_frontier(ranks, stats)
 
 
-def _overlap(*thunks):
+def _overlap(spark: SparkSession, *thunks):
     """Materialize INDEPENDENT input frames concurrently (guide §2.6:
     overlap independent jobs). Each thunk performs eager Spark actions
     (persist materializations / localCheckpoints) that do not depend on
@@ -6058,22 +6058,22 @@ def _overlap(*thunks):
 
     ``pyspark.inheritable_thread_target`` propagates the caller's
     job-description/group thread-locals into the pool threads so
-    bench/UI labels survive. On PySpark 4.x the ACTIVE SESSION must be
-    passed (``inheritable_thread_target(session)(fn)``) — the bare-
-    function form warns 'Spark session is not provided' and silently
-    drops tag/label inheritance (r12 ADVICE). With pinned threads off,
-    that session form returns the session itself, not a wrapper; the
+    bench/UI labels survive. On PySpark 4.x the session must be passed
+    (``inheritable_thread_target(session)(fn)``) — the bare-function
+    form warns 'Spark session is not provided' and silently drops
+    tag/label inheritance (r12 ADVICE). The caller passes ``spark``
+    explicitly: ``getActiveSession()`` is None inside this pool's own
+    threads, so a nested ``_overlap`` (``_frontier_inputs`` run from a
+    thunk) would fall back to the bare form. With pinned threads off,
+    the session form returns the session itself, not a wrapper; the
     thunks then run unwrapped, as the bare-function form would."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
 
     if len(thunks) == 1:
         return (thunks[0](),)
-    sess = SparkSession.getActiveSession()
-    wrap = (inheritable_thread_target(sess) if sess is not None
-            else inheritable_thread_target)
+    wrap = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(wrap(t) if callable(wrap) else t)
                 for t in thunks]
@@ -6120,6 +6120,7 @@ def _frontier_inputs(base: DataFrame):
     # them overlapped (guide §2.6) so the stats corpus scan fills the
     # cores the five tiny pagerank-round jobs leave idle.
     ranks, stats = _overlap(
+        base.sparkSession,
         lambda: WB.host_pagerank(_site_links(d), iters=5),
         stats.localCheckpoint,
     )
@@ -6968,6 +6969,7 @@ def crawl_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the frontier build (pagerank + stats) and the robots checkpoint
     # are independent eager pipelines — overlap them (guide §2.6)
     (ranks, stats), (frontier, robots) = _overlap(
+        spark,
         lambda: _frontier_inputs(base),
         lambda: _robots_inputs(d),
     )
@@ -8005,6 +8007,7 @@ def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frontier build and robots checkpoint are independent — overlap
     # them (guide §2.6)
     (ranks, stats), (frontier, robots) = _overlap(
+        spark,
         lambda: _frontier_inputs(base),
         lambda: _robots_inputs(d),
     )
@@ -8209,6 +8212,7 @@ def crawl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frontier build and robots checkpoint are independent — overlap
     # them (guide §2.6)
     (ranks, stats), (frontier, robots) = _overlap(
+        spark,
         lambda: _frontier_inputs(base),
         lambda: _robots_inputs(d),
     )

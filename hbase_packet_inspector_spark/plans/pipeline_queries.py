@@ -470,53 +470,6 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Decoded capture memo for the CURRENT session only: the pcap scan ->
-# framing + protobuf decode pipeline is the expensive prefix BOTH
-# capture queries share; a deployment decodes a capture once and
-# queries it many times. Single-entry (latest session wins) so stopped
-# sessions and their checkpointed tables are never pinned for process
-# lifetime; the session object rides in the value so a recycled id()
-# can never serve stale tables. The third slot records the RDD ids
-# backing the tables' localCheckpoint, which Engine.register_tables
-# takes on the finalized capture. A lazy checkpoint registers its RDD
-# when it is planned, so the ids are known as soon as register_tables
-# returns; under AQE that planning also runs the shuffle-map stages
-# (pcap scan, the framing + decode pass and correlation), so the
-# memo MISS pays the derivation there and the first action computes
-# only the last stage into the checkpoint. Revalidation checks id-presence in the
-# context's persistent-RDD map, a pure driver-side JVM call, NOT a
-# Spark job, and exactly the condition the one observed failure mode
-# (an external unpersist sweep) violates.
-_HBASE_CAPTURE_MEMO: list[tuple[SparkSession, dict, frozenset]] = []
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set:
-    """Driver-side snapshot of the context's persistent-RDD ids (the
-    storage-API view; no job)."""
-    try:
-        m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        it = m.keysIterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-    except Exception:  # pragma: no cover - JVM gateway gone
-        return set()
-
-
-def capture_memo_rdd_ids(spark: SparkSession) -> frozenset:
-    """RDD ids backing the live capture memo for ``spark`` (empty when
-    none). Session-hygiene sweeps (bench.py::_release_rdds) use this to
-    SKIP the memo's blocks: the memo is one bounded block set (a decoded
-    test capture, ~10^3 rows), so keeping it persisted costs nothing
-    while unpersisting it forced a full pcap->reassembly->decode rebuild
-    on every later capture query (the documented 0.27->0.82 s r11
-    regression)."""
-    if _HBASE_CAPTURE_MEMO and _HBASE_CAPTURE_MEMO[0][0] is spark:
-        return _HBASE_CAPTURE_MEMO[0][2]
-    return frozenset()
-
-
 # The committed HBase RPC captures (FIXTURES.md §3 scenarios) and the
 # four tables their scenario model says they hold, both written by
 # tools/make_hbase_fixture.py without the engine: the DuckDB oracle of
@@ -533,28 +486,12 @@ def _load_hbase_capture(spark: SparkSession):
     protobuf decode -> correlation) on the default ports."""
     from ..engine import Engine
 
-    if _HBASE_CAPTURE_MEMO and _HBASE_CAPTURE_MEMO[0][0] is spark:
-        _, tables, ids = _HBASE_CAPTURE_MEMO[0]
-        # revalidate: the memo'd tables read localCheckpoint blocks; an
-        # unpersist sweep between queries would leave later capture
-        # queries failing with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The
-        # check is id-presence in the persistent-RDD map — the exact
-        # condition an unpersist violates, costs no Spark job (the old
-        # take(1) probe ran one per memo HIT), and cannot be faked
-        # green by an unrelated transient error (the old bare except
-        # discarded the memo on ANY failure and paid a full rebuild).
-        if ids and ids <= _persistent_rdd_ids(spark):
-            return tables
-        _HBASE_CAPTURE_MEMO[:] = []
-
-    eng = Engine(spark).load_pcap(os.path.join(_HBASE_PCAP_DIR, "*.pcap"))
-    # register_tables checkpoints the finalized capture; the diff names
-    # that checkpoint's RDDs for revalidation
-    before = _persistent_rdd_ids(spark)
-    tables = eng.register_tables().tables
-    ids = frozenset(_persistent_rdd_ids(spark) - before)
-    _HBASE_CAPTURE_MEMO[:] = [(spark, tables, ids)]
-    return tables
+    return (
+        Engine(spark)
+        .load_pcap(os.path.join(_HBASE_PCAP_DIR, "*.pcap"))
+        .register_tables()
+        .tables
+    )
 
 
 @register(

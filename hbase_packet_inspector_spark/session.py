@@ -72,10 +72,11 @@ def get_spark(app_name: str = "hpi-spark", cpus: int | None = None) -> SparkSess
         # CPU-dense stages whose inputs are byte-small keep their
         # parallelism via the library's explicit repartition discipline
         # (_spread and friends), which AQE coalescing is exempt from.
-        # Env-overridable for A/B probes; scale-independent (at 100 TB
-        # the advisory 64 MB target is what you want respected).
+        # Scale-independent (at 100 TB the advisory 64 MB target is what
+        # you want respected). A runtime SQL conf: an A/B run flips it
+        # with spark.conf.set.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+                "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -274,11 +274,26 @@ def _decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+def _glob_files(spark: SparkSession, path: str) -> list[str]:
+    """The paths Hadoop's ``globStatus`` matches for ``path``, expanded on
+    the driver. Spark's file sources glob the same way, so loading the
+    matches reads the same files in the same scan tasks; a lone glob
+    string, by contrast, makes the metadata-log probe stat the literal
+    pattern and log a FileNotFoundException trace on every read."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.globStatus(jpath)
+    if not found:  # None for a missing literal path, [] for a dry glob
+        raise FileNotFoundError(f"no capture file matches {path}")
+    return [st.getPath().toString() for st in found]
+
+
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Capture file(s)/glob -> one row per IPv4/TCP payload packet
     (PACKET_SCHEMA). A4 packet->map projection, batch form. Accepts
     both classic pcap and pcapng containers, per file."""
-    raw = spark.read.format("binaryFile").load(path).select("path", "content")
+    raw = (spark.read.format("binaryFile")
+           .load(_glob_files(spark, path)).select("path", "content"))
     return raw.mapInPandas(_decode_files, PACKET_SCHEMA)
 
 

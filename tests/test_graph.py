@@ -344,11 +344,15 @@ def test_parse_robots_and_gate_rules(spark):
     }
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_crawl_cycle_fetch_invariants(spark):
     """The composed next-cycle list obeys its own rules: fetch implies
     robots-allowed AND non-blocked host AND positive priority; every
     dup-blocked host's URLs are all fetch=false; /private URLs are
-    always robots-blocked."""
+    always robots-blocked. Its nested ``_overlap`` (``_frontier_inputs``
+    run from a pool thread) must pass the session on: the bare-function
+    fallback warns and drops the job-description inheritance the stage
+    ledger reads."""
     from hbase_packet_inspector_spark import plans
 
     rows = plans.QUERIES["crawl_cycle"].fn(
@@ -862,19 +866,20 @@ def test_overlap_materializes_concurrently_and_preserves_order(spark):
     from hbase_packet_inspector_spark.plans.dataprep_queries import _overlap
 
     a, b = _overlap(
+        spark,
         lambda: spark.range(10).localCheckpoint(),
         lambda: spark.range(3).localCheckpoint(),
     )
     assert (a.count(), b.count()) == (10, 3)
 
-    (only,) = _overlap(lambda: spark.range(7).localCheckpoint())
+    (only,) = _overlap(spark, lambda: spark.range(7).localCheckpoint())
     assert only.count() == 7
 
     def boom():
         raise ValueError("boom")
 
     with pytest.raises(ValueError, match="boom"):
-        _overlap(lambda: spark.range(1).localCheckpoint(), boom)
+        _overlap(spark, lambda: spark.range(1).localCheckpoint(), boom)
 
 
 def test_overlap_runs_unwrapped_without_pinned_threads(spark, monkeypatch):
@@ -888,6 +893,6 @@ def test_overlap_runs_unwrapped_without_pinned_threads(spark, monkeypatch):
 
     monkeypatch.setattr(pyspark, "inheritable_thread_target",
                         lambda f=None: f)
-    a, b = _overlap(lambda: spark.range(4).count(),
+    a, b = _overlap(spark, lambda: spark.range(4).count(),
                     lambda: spark.range(2).count())
     assert (a, b) == (4, 2)

@@ -5,6 +5,10 @@ synthesized HBase RPC protobuf captures (``perfbench.wire``)."""
 
 import os
 import struct
+import subprocess
+import sys
+
+import pytest
 
 from hbase_packet_inspector_spark.engine import Engine
 from hbase_packet_inspector_spark.sources import pcap as P
@@ -282,3 +286,31 @@ def test_classic_pcap_ts_fraction_is_exact():
         (row,) = P._parse_capture_bytes("p", bytes(blob))
         assert row["ts"] == pd.Timestamp(1000, unit="s") + pd.Timedelta(
             want_us, unit="us")
+
+
+def test_read_pcap_expands_glob_on_driver():
+    """A capture glob is expanded on the driver and the matched files are
+    loaded as such: the committed glob reads all 12 captures and none of
+    the model-table parquet under its subdirectories, and Spark's
+    metadata-log probe never stats the literal pattern (it used to log
+    ``WARN FileStreamSink: Assume no metadata directory`` with a
+    FileNotFoundException trace on every read)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from hbase_packet_inspector_spark.session import get_spark\n"
+        "from hbase_packet_inspector_spark.sources import pcap as P\n"
+        "spark = get_spark('glob', cpus=2)\n"
+        f"df = P.read_pcap(spark, {os.path.join(FIXDIR, '*.pcap')!r})\n"
+        "print(df.select('path').distinct().count())\n"
+        "spark.stop()\n"
+    )
+    r = subprocess.run([sys.executable, "-c", code], cwd=root, timeout=600,
+                       capture_output=True, text=True)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.split()[-1] == "12"
+    assert "FileStreamSink" not in r.stderr
+
+
+def test_read_pcap_dry_glob_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        P.read_pcap(spark, str(tmp_path / "*.pcap"))

@@ -118,45 +118,3 @@ def test_singleton_promotion(spark):
     assert t["actions"].count() == 0 and t["results"].count() == 0
     res = t["responses"].collect()[0]
     assert res.method == "put" and res.cells == 3
-
-
-def test_capture_memo_revalidation_without_jobs(spark):
-    """The capture memo (a) revalidates via the storage API, running
-    ZERO Spark jobs on a hit, (b) survives a hygiene sweep that honors
-    capture_memo_rdd_ids, and (c) rebuilds — instead of failing — after
-    an external unpersist-everything sweep."""
-    from hbase_packet_inspector_spark.plans import pipeline_queries as pq
-
-    pq._HBASE_CAPTURE_MEMO[:] = []
-    t1 = pq._load_hbase_capture(spark)
-    ids = pq.capture_memo_rdd_ids(spark)
-    assert ids  # lazy localCheckpoint persists at plan time
-    t1["responses"].count()  # materialize the checkpoint blocks
-
-    # (a) memo hit runs no job
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    t_hit = pq._load_hbase_capture(spark)
-    assert t_hit is t1
-    assert set(tracker.getJobIdsForGroup()) == before
-
-    # (b) a keep-aware sweep (bench.py::_release_rdds semantics)
-    keep = pq.capture_memo_rdd_ids(spark)
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = m.iterator()
-    while it.hasNext():
-        kv = it.next()
-        if kv._1() not in keep:
-            kv._2().unpersist(False)
-    assert pq._load_hbase_capture(spark) is t1
-    assert t1["responses"].count() > 0  # blocks still readable
-
-    # (c) an unpersist-ALL sweep invalidates; loader rebuilds cleanly
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = m.valuesIterator()
-    while it.hasNext():
-        it.next().unpersist(False)
-    t2 = pq._load_hbase_capture(spark)
-    assert t2 is not t1
-    assert t2["responses"].count() > 0
-    pq._HBASE_CAPTURE_MEMO[:] = []

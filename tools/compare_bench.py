@@ -58,6 +58,15 @@ def load_queries(path: str) -> dict[str, float]:
     return out
 
 
+def timed_action(path: str) -> str:
+    """The record's timed action; records written before bench.py carried
+    the field timed ``.count()``."""
+    d = json.load(open(path))
+    rec = d.get("parsed") if isinstance(d.get("parsed"), dict) else d
+    m = re.search(r'"timed_action":\s*"(\w+)"', d.get("tail", ""))
+    return rec.get("timed_action") or (m.group(1) if m else "count")
+
+
 def main() -> None:
     args = sys.argv[1:]
     if len(args) == 2:
@@ -84,6 +93,10 @@ def main() -> None:
     print(f"# {os.path.basename(old_p)} -> {os.path.basename(new_p)}: "
           f"{len(common)} queries in both "
           f"({len(old)} old / {len(new)} new)")
+    a_old, a_new = timed_action(old_p), timed_action(new_p)
+    if a_old != a_new:
+        print(f"# timed action differs: {a_old} -> {a_new}; "
+              "per-query ratios compare different work")
     t_old = sum(old[q] for q in common)
     t_new = sum(new[q] for q in common)
     print(f"# overlap total {t_old:.1f}s -> {t_new:.1f}s "

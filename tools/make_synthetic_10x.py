@@ -27,9 +27,10 @@ hardcoded to the sf0.1 corpus size.
 Usage: python tools/make_synthetic_10x.py [src_dir] [out_dir] [copies]
        (defaults: /root/testdata/sf0.1 /tmp/sfbig 10)
 
-Probe pattern (isolated, post-warmup, clearCache between runs):
-    q.fn(spark, '/root/testdata/sf0.1').count()   # 1x
-    q.fn(spark, '/tmp/sfbig').count()             # 10x
+Probe a registered query at 1x and 10x with tools/isolate.py (fresh
+session, warm-up, noop-sink runs, release sweep between runs, per-stage
+ledger per dir):
+    python tools/isolate.py QUERY --sf /root/testdata/sf0.1 /tmp/sfbig
 """
 
 from __future__ import annotations

@@ -33,34 +33,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def get_probe_spark() -> SparkSession:
-    from hbase_packet_inspector_spark.session import _ship_package
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("stream-state-probe")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        # the B11 posture: RocksDB keeps the (bounded) live window
-        # off-heap and spills under memory pressure
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
-    )
-    _ship_package(spark)
-    return spark
+from hbase_packet_inspector_spark.session import get_spark
 
 
 def _batch_events(spark, batch_idx: int, conns: int):
@@ -115,8 +90,16 @@ def _batch_events(spark, batch_idx: int, conns: int):
 def main() -> None:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     conns = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
-    spark = get_probe_spark()
+    spark = get_spark("stream-state-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    # the B11 posture: RocksDB keeps the (bounded) live window off-heap
+    # and spills under memory pressure. A runtime SQL conf, read when
+    # the query starts.
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
 
     from hbase_packet_inspector_spark.schema import RPC_EVENT_SCHEMA
     from hbase_packet_inspector_spark.streaming.pipeline import (
