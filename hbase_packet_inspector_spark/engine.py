@@ -16,6 +16,15 @@ The four public tables (requests/responses/actions/results) are registered
 as temp views, so the entire Spark SQL surface replaces the H2 prompt —
 every query from the reference README (join on (client, port, call_id),
 latency percentiles, hot tables...) runs verbatim.
+
+Like the reference, which loads a capture into its H2 tables once
+(db.clj:8-37), ``register_tables`` derives the finalized record frame once
+for every source, and the four views read that one frame. A capture
+(``load_pcap``) is local-checkpointed: the blocks are not matched by plan,
+so a rotated capture at the same path is never answered from an earlier
+load. Pre-decoded events (``load_events``) are cached: registration
+submits no job, where a checkpoint would run both correlation shuffles in
+it, and the first query fills the cache for all four views.
 """
 
 from __future__ import annotations
@@ -38,6 +47,16 @@ class Engine:
         self._events: DataFrame | None = None
         # set by load_pcap: register_tables then checkpoints the capture
         self._from_pcap = False
+        # the path load_events read, refreshed before register_tables caches
+        self._source_path: str | None = None
+        # the finalized frame register_tables cached (events mode)
+        self._cached: DataFrame | None = None
+
+    def _release(self) -> None:
+        """Unpersist the frame the last ``register_tables`` cached."""
+        if self._cached is not None:
+            self._cached.unpersist()
+            self._cached = None
 
     # -- ingestion ------------------------------------------------------
 
@@ -46,7 +65,9 @@ class Engine:
         raw pcap decode is an edge adapter, SURVEY.md §7). ``fmt='kafka-json'``
         reads files of sink-payload JSON lines — what a consumer dumps from
         the reference's Kafka topics — via the inverse sink transform."""
+        self._release()
         self._from_pcap = False
+        self._source_path = None if isinstance(source, DataFrame) else source
         if isinstance(source, DataFrame):
             self._events = source
         elif fmt == "parquet":
@@ -81,9 +102,11 @@ class Engine:
         from .sources import pcap as P
         from .sources.hbase_decode import decode_hbase_chunks
 
+        self._release()
         chunks = P.packets_to_chunks(P.read_pcap(self.spark, path), ports)
         self._events = decode_hbase_chunks(chunks)
         self._from_pcap = True
+        self._source_path = None
         return self
 
     # -- file mode ------------------------------------------------------
@@ -115,28 +138,45 @@ class Engine:
         """Correlate -> scanner-enrich -> finalize the loaded events and
         register the four routed tables as temp views.
 
-        After ``load_pcap`` the capture is derived once per call: the
-        finalized frame (the last frame the four tables share) is
-        local-checkpointed lazily. AQE runs its shuffle-map stages (pcap
-        scan, the framing + decode pass, correlation) while this call
-        plans it, the first table action computes the last stage into the
-        checkpoint, and every table reads its blocks from then on. A local
-        checkpoint, unlike ``cache()``, is not matched by plan, so a later
-        load of the same (rotated) path never reads these blocks, and the
-        ContextCleaner frees them once the tables are dropped. Its blocks
-        do not survive a lost executor — the same trade the graph round
-        frames make.
+        The finalized frame (the last frame the four tables share) is
+        derived once per call, whatever the source, so a query on any view
+        never re-runs the correlation windows. How it is kept depends on
+        what is expensive to read again:
 
-        After ``load_events`` the tables stay lazy views that submit no job
-        here: under AQE even a lazy checkpoint runs its shuffle-map stages
-        when it is planned, which would move both correlation shuffles into
-        this call for a source that is cheap to read again."""
+        - After ``load_pcap`` it is local-checkpointed lazily. AQE runs the
+          shuffle-map stages (pcap scan, the framing + decode pass,
+          correlation) while this call plans it, the first table action
+          computes the last stage into the checkpoint, and every table
+          reads its blocks from then on. A local checkpoint is not matched
+          by plan, so a later load of the same (rotated) path never reads
+          these blocks, and the ContextCleaner frees them once the tables
+          are dropped. Its blocks do not survive a lost executor — the
+          same trade the graph round frames make.
+        - After ``load_events`` it is cached (``cache()``, an
+          ``InMemoryRelation``): this call submits no job, and the first
+          table action fills the cache for all four views. A local
+          checkpoint would move both correlation shuffles into this call
+          under AQE. The cache is matched by plan, so a path source is
+          refreshed first (``refreshByPath``): registering again, or
+          registering a path another Engine cached, reads the files as
+          they are at this call, even if they were rewritten outside
+          Spark.
+
+        Loading or registering again unpersists the previous cached
+        frame."""
         if self._events is None:
             raise RuntimeError("call load_events() first")
         ttl = STATE_EXPIRATION_MS if ttl_ms is None else ttl_ms
+        if self._source_path is not None:
+            # re-lists the file index the loaded events share with every
+            # cached plan over the path, this Engine's previous one included
+            self.spark.catalog.refreshByPath(self._source_path)
+        self._release()
         finalized = finalize(scanner_enrich(correlate(self._events, ttl), ttl))
         if self._from_pcap:
             finalized = finalized.localCheckpoint(eager=False)
+        else:
+            finalized = self._cached = finalized.cache()
         self.tables = route(finalized)
         for name, df in self.tables.items():
             df.createOrReplaceTempView(name)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import json
 import warnings
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -223,6 +223,27 @@ def _run_correlated_stream(
     q.awaitTermination()
 
 
+def _routed_once(
+    write: Callable[[dict[str, DataFrame], int], None],
+) -> Callable[[DataFrame, int], None]:
+    """A foreachBatch sink that derives the micro-batch once for its four
+    tables: ``batch_df`` is persisted before ``write(tables, batch_id)``
+    runs its four actions and released after them. Unpersisted, every
+    action re-runs the stateful correlation stage (Spark's foreachBatch
+    guide: persist before writing to several places)."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        # scanner enrichment already happened statefully upstream (cross-
+        # batch correct); only finalization + routing remain per batch
+        batch_df.persist()
+        try:
+            write(finalize_and_route(batch_df), batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return _sink
+
+
 def run_pipeline_available_now(
     spark, source_dir: str, sink_tables: dict[str, list],
     max_files_per_trigger: int | None = None,
@@ -235,14 +256,12 @@ def run_pipeline_available_now(
     ``max_files_per_trigger`` forces multi-micro-batch execution — tests use
     it to prove state survives batch boundaries."""
 
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        # scanner enrichment already happened statefully upstream (cross-
-        # batch correct); only finalization + routing remain per batch
-        for name, df in finalize_and_route(batch_df).items():
+    def _collect(tables: dict[str, DataFrame], _batch_id: int) -> None:
+        for name, df in tables.items():
             sink_tables.setdefault(name, []).extend(df.collect())
 
     _run_correlated_stream(
-        spark, source_dir, _sink, source_dir + "/_checkpoint",
+        spark, source_dir, _routed_once(_collect), source_dir + "/_checkpoint",
         max_files_per_trigger,
     )
 
@@ -266,14 +285,14 @@ def run_pipeline_to_parquet(
     without touching the stream.
     """
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        for name, df in finalize_and_route(batch_df).items():
+    def _write(tables: dict[str, DataFrame], batch_id: int) -> None:
+        for name, df in tables.items():
             df.write.mode("overwrite").parquet(
                 f"{out_dir}/{name}/batch_id={batch_id}"
             )
 
     _run_correlated_stream(
-        spark, source_dir, _sink, out_dir + "/_checkpoint",
+        spark, source_dir, _routed_once(_write), out_dir + "/_checkpoint",
         max_files_per_trigger,
     )
 

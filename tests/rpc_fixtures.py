@@ -12,7 +12,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema import RPC_EVENT_SCHEMA
+from hbase_packet_inspector_spark.schema import RPC_EVENT_SCHEMA
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 CLIENT = "10.0.0.7"

@@ -4,7 +4,7 @@
 import os
 
 from hbase_packet_inspector_spark.engine import Engine
-from hbase_packet_inspector_spark.sources import fixtures as fx
+import rpc_fixtures as fx
 from perfbench import wire
 
 
@@ -231,6 +231,96 @@ def test_events_mode_register_submits_no_job(spark, tmp_path):
     before = set(tracker.getJobIdsForGroup())
     eng.register_tables()
     assert set(tracker.getJobIdsForGroup()) == before
+
+
+def _node_names(plan) -> list[str]:
+    """Operator names of a logical plan, not descending into the physical
+    plan an ``InMemoryRelation`` carries."""
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def _cached_plans(spark) -> int:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    entries = cm.getClass().getDeclaredField("cachedData")
+    entries.setAccessible(True)
+    return entries.get(cm).size()
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _write_events(spark, rows, path) -> None:
+    """One parquet file written outside Spark, so a rewrite keeps its name."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(fx.to_df(spark, rows).toArrow(),
+                   os.path.join(path, "part-0.parquet"), row_group_size=4)
+
+
+def test_events_mode_tables_read_one_cached_frame(spark, tmp_path):
+    """After load_events, the first table action fills one cached
+    finalized frame, and every view reads it instead of re-running the
+    correlation windows."""
+    from hbase_packet_inspector_spark.operators.pipeline import build_tables
+
+    path = str(tmp_path / "ev")
+    fx.to_df(spark, fx.random_read() + fx.scan()).write.parquet(path)
+    eng = Engine(spark).load_events(path)
+    # collected before register_tables: after it, this plan would match
+    # the cache and the comparison would check nothing
+    want = {name: _multiset(df)
+            for name, df in build_tables(eng._events).items()}
+    eng.register_tables()
+    eng.sql("SELECT count(*) FROM results").collect()
+    assert set(eng.tables) == set(want)
+    for name, df in eng.tables.items():
+        ops = _node_names(df._jdf.queryExecution().optimizedPlan())
+        assert "InMemoryRelation" in ops and "Window" not in ops, (name, ops)
+        got = _multiset(df)
+        assert got and got == want[name], name
+
+
+def test_events_mode_register_twice_keeps_one_cached_frame(spark, tmp_path):
+    path = str(tmp_path / "ev")
+    fx.to_df(spark, fx.random_read()).write.parquet(path)
+    plans0, rdds0 = _cached_plans(spark), _persistent_rdds(spark)
+    eng = Engine(spark).load_events(path)
+
+    def register() -> tuple[int, int]:
+        eng.register_tables()
+        eng.sql("SELECT count(*) FROM requests").collect()
+        return (_cached_plans(spark) - plans0,
+                len(_persistent_rdds(spark) - rdds0))
+
+    assert register() == (1, 1)
+    assert register() == (1, 1)
+
+
+def test_events_mode_register_reads_rewritten_files(spark, tmp_path):
+    """A file rewritten at the same path outside Spark, then registered
+    again, gives the new rows, not the cached or the listed old ones."""
+    from hbase_packet_inspector_spark.operators.pipeline import build_tables
+
+    path = str(tmp_path / "ev")
+    _write_events(spark, fx.random_read()[:4], path)
+    eng = Engine(spark).load_events(path).register_tables()
+    assert eng.sql("SELECT count(*) FROM requests").collect()[0][0] == 2
+
+    rows = fx.random_read() + [
+        dict(r, event_id=r["event_id"] + 500, port=41000) for r in fx.scan()]
+    _write_events(spark, rows, path)
+    eng.register_tables()
+    want = build_tables(fx.to_df(spark, rows))
+    for name, df in eng.tables.items():
+        assert _multiset(df) == _multiset(want[name]), name
 
 
 def test_own_session_skips_dataframe_call_site_capture(spark):

@@ -4,7 +4,7 @@ end-to-end fixture assertions (test/hbase_packet_inspector/core_test.clj:248-377
 from pyspark.sql import functions as F
 
 from hbase_packet_inspector_spark.operators import build_tables
-from hbase_packet_inspector_spark.sources import fixtures as fx
+import rpc_fixtures as fx
 
 
 def tables(spark, rows):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_packet_inspector_spark.operators import build_tables
-from hbase_packet_inspector_spark.sources import fixtures as fx
+import rpc_fixtures as fx
 from hbase_packet_inspector_spark.streaming import (
     run_pipeline_available_now,
     to_kafka_records,
@@ -323,6 +323,64 @@ def test_parquet_sink_exactly_once(spark, tmp_path, workload):
     import os
     parts = [p for p in os.listdir(f"{out}/requests") if p.startswith("batch_id=")]
     assert len(parts) > 1
+
+
+@pytest.mark.parametrize("sink", ["collect", "parquet"])
+def test_file_replay_sinks_derive_each_batch_once(
+        spark, tmp_path, monkeypatch, workload, sink):
+    """The four table actions of a file-replay sink share one run of the
+    stateful correlation per micro-batch: the state function runs once per
+    connection per batch, and the tables still equal the batch pipeline's."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hbase_packet_inspector_spark.streaming import pipeline as SP
+
+    # three time-ordered part files, replayed one per micro-batch in the
+    # order of their modification times
+    src = tmp_path / "events"
+    src.mkdir()
+    rows = sorted(workload, key=lambda r: (r["ts"], r["event_id"]))
+    chunks = [rows[i * len(rows) // 3:(i + 1) * len(rows) // 3]
+              for i in range(3)]
+    for i, chunk in enumerate(chunks):
+        part = str(src / f"part-{i}.parquet")
+        pq.write_table(fx.to_df(spark, chunk).toArrow(), part)
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
+    # the state function runs once per connection with rows in a batch
+    want_calls = sum(len({(r["client"], r["port"]) for r in chunk})
+                     for chunk in chunks)
+
+    log = str(tmp_path / "calls.log")
+    correlate_group = SP._correlate_group
+
+    def counted(key, pdfs, state):
+        with open(log, "a") as fh:  # Python workers append, one line a call
+            fh.write(f"{key}\n")
+        yield from correlate_group(key, pdfs, state)
+
+    monkeypatch.setattr(SP, "_correlate_group", counted)
+    want = build_tables(fx.to_df(spark, workload))
+    if sink == "collect":
+        got: dict[str, list] = {}
+        SP.run_pipeline_available_now(spark, str(src), got,
+                                      max_files_per_trigger=1)
+    else:
+        out = str(tmp_path / "out")
+        SP.run_pipeline_to_parquet(spark, str(src), out,
+                                   max_files_per_trigger=1)
+        got = {name: spark.read.parquet(f"{out}/{name}").drop("batch_id")
+               .collect() for name in want}
+
+    with open(log) as fh:
+        assert len(fh.readlines()) == want_calls
+
+    def key(rows):
+        return sorted(tuple(str(x) for x in r) for r in rows)
+
+    for name, df in want.items():
+        assert key(got.get(name, [])) == key(df.collect()), name
 
 
 def _replay(spark, df, transform, src_dir, schema=None):
